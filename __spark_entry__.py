@@ -1,8 +1,11 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry(spark)    -> flagship octree tiling over sf0.001 documents.
-queries()       -> one callable per implemented operator (SURVEY.md §2).
+queries()       -> one callable per gated operator (SURVEY.md §2).
 oracle_sql()    -> matching ANSI SQL for DuckDB over the same parquet views.
+legacy_queries() / legacy_oracle_sql() -> the same pair for the entries
+                   outside the gate. All four derive from one list of
+                   Query records (_registry).
 
 Convention shared by both sides so value-hashes line up:
 - deterministic geocode from doc_id, pure 64-bit integer arithmetic:
@@ -17,6 +20,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -54,17 +58,16 @@ def _par(df: DataFrame) -> DataFrame:
     df.rdd.getNumPartitions() would be exact but costs ~0.5 s of
     driver-side planning per fresh plan, a constant that swamped the
     win on sub-second queries when measured (r7)."""
-    import os as _os
-
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    max_split = int(spark.conf.get("spark.sql.files.maxPartitionBytes",
-                                   "134217728"))
+    # SQLConf parses byte strings ('128m') the way the scan planner does
+    max_split = int(
+        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
     files = df.inputFiles()
     paths = [f[len("file:"):] if f.startswith("file:") else f
              for f in files]
     try:
-        total = sum(_os.path.getsize(p) for p in paths)
+        total = sum(os.path.getsize(p) for p in paths)
     except OSError:
         return df          # non-local fs: leave the scan alone
     est_splits = max(len(files), -(-total // max_split))
@@ -1184,104 +1187,22 @@ def q_ann_ivf(spark, sf_dir):
     return s1.crossJoin(s2).crossJoin(s3).crossJoin(s4)
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "aabb_agg": q_aabb_agg,
-        "octant_hist": q_octant_hist,
-        "tile_quadkey": q_tile_quadkey,
-        "cell_key": q_cell_key,
-        "pip_rect": q_pip_rect,
-        "pip_polygon": q_pip_polygon,
-        "topk_per_lang": q_topk_per_lang,
-        "small_cell_rollup": q_small_cell_rollup,
-        "spacing_levels": q_spacing_levels,
-        "count_invariant": q_count_invariant,
-        "dedup_stats": q_dedup_stats,
-        "token_stats": q_token_stats,
-        "quality_metrics": q_quality_metrics,
-        "llm_pipeline": q_llm_pipeline,
-        "tfidf_terms": q_tfidf_terms,
-        "repetition_stats": q_repetition_stats,
-        "fingerprint": q_fingerprint,
-        # r6 late: substring-duplication rate + self-trained unigram-LM
-        # score (swapped in for knn_top5 / corpus_curation, which are
-        # physically subsumed by knn_join / llm_pipeline and retired to
-        # legacy_queries below — registry stays exactly the 50-entry
-        # checked window)
-        "substring_dup": q_substring_dup,
-        "unigram_logprob": q_unigram_logprob,
-        "neardup_pairs": q_neardup_pairs,
-        "ngram_jaccard": q_ngram_jaccard,
-        "dedup_clusters": q_dedup_clusters,
-        "knn_join": q_knn_join,
-        "knn_join_bucketed": q_knn_join_bucketed,
-        "knn_points_grid": q_knn_points_grid,
-        "embedding_norms": q_embedding_norms,
-        "affine_transform": q_affine_transform,
-        "ecef_convert": q_ecef_convert,
-        "utm_convert": q_utm_convert,
-        "matrix_transform": q_matrix_transform,
-        "fraction_sample": q_fraction_sample,
-        "quadrant_route": q_quadrant_route,
-        "union_dedup": q_union_dedup,
-        "event_sessions": q_event_sessions,
-        "vector_triangulate": q_vector_triangulate,
-        "feature_quadtree": q_feature_quadtree,
-        "vector_b3dm": q_vector_b3dm,
-        # the octree build's SQL-expressible contract (oracle-checked);
-        # the per-tile histogram is oracle-checked too since r6 (below)
-        "tiling_invariants": q_tiling_invariants,
-        "s2_cells": q_s2_cells,
-        "geohash_cells": q_geohash_cells,
-        "domain_stats": q_domain_stats,
-        "salted_join": q_salted_join,
-        "zorder_key": q_zorder_key,
-        "raster_cells": q_raster_cells,
-        "raster_pyramid": q_raster_pyramid,
-        "raster_vectorize": q_raster_vectorize,
-        # invariant-oracle entries (r4): the raw outputs are seed/hash
-        # dependent, so the entries check the operators' SQL-expressible
-        # contracts instead (raw truth tables live in pytest)
-        "simhash_neardup": q_simhash_neardup,
-        "ann_lsh": q_ann_lsh,
-        "ann_ivf": q_ann_ivf,
-        # r6: oracle-checked via the level-checkpoint twin (DuckDB reads
-        # the accepted=true partitions the build wrote) — no longer
-        # rows-only; the order-dependent accept stays pinned by the
-        # replay goldens + the tiling_invariants companion above
-        "tiling_octree": q_tiling_octree,
-    }
-    # r6: the registry is exactly the driver's verification window —
-    # every registered query is oracle-checked every round (VERDICT r5
-    # next-round #6). The redundant shapes that used to park past the
-    # window (plus the two r6-late rotations) live in legacy_queries()
-    # below: still
-    # benched and plan-audited, no longer separately gate-checked (each
-    # was rows+schema+hash green in r1-r4 and duplicates a physical shape
-    # already inside the window).
+class Query(NamedTuple):
+    """One registry entry: a query builder and its DuckDB twin.
 
-
-def legacy_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Retired-from-gate queries: verified green in rounds 1-4, physically
-    redundant with shapes inside the checked window (plain partial-agg,
-    window top-k, broadcast dim join). Kept callable for bench.py and
-    scripts/plan_audit.py."""
-    return {
-        "hourly_events": q_hourly_events,
-        "top_users": q_top_users,
-        "pricing_summary": q_pricing_summary,
-        "lang_source_cube": q_lang_source_cube,
-        "customer_order_join": q_customer_order_join,
-        # r6 late rotation: green in r1-r6; knn_top5's broadcast-NLJ +
-        # two-stage top-k shape is knn_join's, corpus_curation's
-        # gate->md5-dedup->agg pipeline is llm_pipeline's prefix
-        "knn_top5": q_knn_top5,
-        "corpus_curation": q_corpus_curation,
-        # r6 late: new operators whose gate slots don't exist (window is
-        # full at 50) — verified by tests/test_legacy_parity.py instead
-        "decontaminate": q_decontaminate,
-        "top_ngrams": q_top_ngrams,
-    }
+    `build(spark, sf_dir)` returns the Spark DataFrame; `oracle` is the
+    SQL DuckDB runs over the same parquet views, with the same column
+    names and the same rows. `gated=True` entries form the
+    correctness gate (queries() / oracle_sql()). `gated=False` marks a
+    shape that is physically redundant with a gated query (plain
+    partial-agg, window top-k, broadcast dim join, ...): it stays
+    callable for bench.py and scripts/plan_audit.py, and
+    tests/test_legacy_parity.py checks it against its twin instead of
+    the gate (legacy_queries() / legacy_oracle_sql())."""
+    name: str
+    build: Callable[[SparkSession, str], DataFrame]
+    oracle: str
+    gated: bool = True
 
 
 # shared CTE of the raster-family oracles — the exact SQL twin of
@@ -1306,25 +1227,29 @@ _RASTER_CELLS_SQL = """,
 """
 
 
-def oracle_sql() -> dict[str, str]:
+def _registry() -> list[Query]:
+    """All entries, gated first, in the gate's order. Rendered on every
+    call: the tiling_octree twin reads SPARK_GRAFT_ORACLE_SF_DIR and the
+    module-level _octree_ckpt_dir when called, so a caller may set the
+    one or patch the other after import."""
     from py3dtiles_spark.functions.geohash import geohash_sql
     from py3dtiles_spark.functions.s2 import s2_quad_id_sql
     geo = f"WITH geo AS ({_GEO_SQL})"
     s2_sql = s2_quad_id_sql(6, "x", "y")
     gh_sql = geohash_sql(4, "x", "y")
-    return {
-        "aabb_agg": f"""{geo}
+    return [
+        Query("aabb_agg", q_aabb_agg, f"""{geo}
             SELECT round(min(x),6) AS min_x, round(max(x),6) AS max_x,
                    round(min(y),6) AS min_y, round(max(y),6) AS max_y,
                    round(min(z),6) AS min_z, round(max(z),6) AS max_z
-            FROM geo""",
-        "octant_hist": f"""{geo}
+            FROM geo"""),
+        Query("octant_hist", q_octant_hist, f"""{geo}
             SELECT (CASE WHEN x>=0 THEN 4 ELSE 0 END
                   + CASE WHEN y>=0 THEN 2 ELSE 0 END
                   + CASE WHEN z>=500 THEN 1 ELSE 0 END)::BIGINT AS octant,
                    count(*) AS n
-            FROM geo GROUP BY 1 ORDER BY octant""",
-        "tile_quadkey": f"""{geo}
+            FROM geo GROUP BY 1 ORDER BY octant"""),
+        Query("tile_quadkey", q_tile_quadkey, f"""{geo}
             SELECT CAST((CASE WHEN x>=0 THEN 4 ELSE 0 END
                        + CASE WHEN y>=0 THEN 2 ELSE 0 END
                        + CASE WHEN z>=500 THEN 1 ELSE 0 END) AS VARCHAR)
@@ -1332,21 +1257,21 @@ def oracle_sql() -> dict[str, str]:
                        + CASE WHEN y >= (CASE WHEN y>=0 THEN 42.5 ELSE -42.5 END) THEN 2 ELSE 0 END
                        + CASE WHEN z >= (CASE WHEN z>=500 THEN 750.0 ELSE 250.0 END) THEN 1 ELSE 0 END) AS VARCHAR)
                    AS tile_id, count(*) AS n
-            FROM geo GROUP BY 1 ORDER BY tile_id""",
-        "cell_key": f"""{geo}
+            FROM geo GROUP BY 1 ORDER BY tile_id"""),
+        Query("cell_key", q_cell_key, f"""{geo}
             SELECT (least(greatest(floor(3.0*(x+180.0)/360.0), 0), 2)
                   + least(greatest(floor(3.0*(y+85.0)/170.0), 0), 2) * 4
                   + least(greatest(floor(3.0*(z-0.0)/1000.0), 0), 2) * 16)::BIGINT
                    AS cell_key, count(*) AS n
-            FROM geo GROUP BY 1 ORDER BY cell_key""",
-        "pip_rect": f"""{geo}, rects(rect_id, xmin, ymin, xmax, ymax) AS (
+            FROM geo GROUP BY 1 ORDER BY cell_key"""),
+        Query("pip_rect", q_pip_rect, f"""{geo}, rects(rect_id, xmin, ymin, xmax, ymax) AS (
                 VALUES {", ".join(str(r) for r in _RECTS)})
             SELECT rect_id::BIGINT AS rect_id, count(*) AS hits
             FROM geo JOIN rects
               ON geo.x >= xmin AND geo.x < xmax
              AND geo.y >= ymin AND geo.y < ymax
-            GROUP BY 1 ORDER BY rect_id""",
-        "pip_polygon": f"""{geo}
+            GROUP BY 1 ORDER BY rect_id"""),
+        Query("pip_polygon", q_pip_polygon, f"""{geo}
             SELECT doc_id, geom_id FROM (
                 SELECT doc_id, 7::BIGINT AS geom_id FROM geo
                 WHERE ((150.0 - (-150.0))*(y - (-80.0)) - ((-80.0) - (-80.0))*(x - (-150.0))) > 0
@@ -1357,15 +1282,15 @@ def oracle_sql() -> dict[str, str]:
                 WHERE x > -100.0 AND x < 100.0 AND y > -60.0 AND y < 60.0
                   AND NOT (x > -50.0 AND x < 50.0
                            AND y > -30.0 AND y < 30.0))
-            ORDER BY doc_id, geom_id""",
-        "topk_per_lang": """
+            ORDER BY doc_id, geom_id"""),
+        Query("topk_per_lang", q_topk_per_lang, """
             SELECT lang, rk, doc_id, n_chars FROM (
                 SELECT lang, doc_id, n_chars,
                        row_number() OVER (PARTITION BY lang
                            ORDER BY n_chars DESC, doc_id ASC)::BIGINT AS rk
                 FROM documents)
-            WHERE rk <= 3 ORDER BY lang, rk""",
-        "small_cell_rollup": f"""{geo}, cells AS (
+            WHERE rk <= 3 ORDER BY lang, rk"""),
+        Query("small_cell_rollup", q_small_cell_rollup, f"""{geo}, cells AS (
                 SELECT 'f' || CAST(floor((x+180.0)/10.0)::BIGINT AS VARCHAR) AS fine,
                        'c' || CAST(floor((x+180.0)/40.0)::BIGINT AS VARCHAR) AS coarse
                 FROM geo),
@@ -1373,79 +1298,37 @@ def oracle_sql() -> dict[str, str]:
                 SELECT fine, coarse, count(*) AS cnt FROM cells GROUP BY 1, 2)
             SELECT CASE WHEN cnt < 50 THEN coarse ELSE fine END AS cell,
                    sum(cnt)::BIGINT AS n
-            FROM counts GROUP BY 1 ORDER BY cell""",
-        "spacing_levels": f"""{geo}, agg AS (
+            FROM counts GROUP BY 1 ORDER BY cell"""),
+        Query("spacing_levels", q_spacing_levels, f"""{geo}, agg AS (
                 SELECT sqrt(pow(max(x)-min(x),2) + pow(max(y)-min(y),2)
                           + pow(max(z)-min(z),2)) AS diag FROM geo)
             SELECT level::BIGINT AS level,
                    round(diag/125.0/pow(2.0, level), 6) AS spacing
             FROM agg, generate_series(0, 5) AS t(level)
-            ORDER BY level""",
-        "count_invariant": f"""{geo}, per AS (
+            ORDER BY level"""),
+        Query("count_invariant", q_count_invariant, f"""{geo}, per AS (
                 SELECT (CASE WHEN x>=0 THEN 2 ELSE 0 END
                       + CASE WHEN y>=0 THEN 1 ELSE 0 END) AS q, count(*) AS n
                 FROM geo GROUP BY 1)
             SELECT sum(n)::BIGINT AS points_assigned,
-                   count(*)::BIGINT AS n_cells FROM per""",
-        "dedup_stats": """
+                   count(*)::BIGINT AS n_cells FROM per"""),
+        Query("dedup_stats", q_dedup_stats, """
             SELECT count(*) AS n_docs,
                    count(DISTINCT md5(text)) AS n_unique_texts
-            FROM documents""",
-        "token_stats": """
+            FROM documents"""),
+        Query("token_stats", q_token_stats, """
             SELECT lang, count(*) AS n_docs,
                    sum(len(string_split(text, ' ')))::BIGINT AS sum_tokens,
                    round(avg(len(string_split(text, ' '))), 4) AS avg_tokens
-            FROM documents GROUP BY lang ORDER BY lang""",
-        "quality_metrics": """
+            FROM documents GROUP BY lang ORDER BY lang"""),
+        Query("quality_metrics", q_quality_metrics, """
             SELECT doc_id,
                    len(string_split(text, ' '))::BIGINT AS n_tokens,
                    length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g'))::BIGINT
                        AS punct_len,
                    length(text)::BIGINT AS text_len
-            FROM documents WHERE doc_id < 100 ORDER BY doc_id""",
-        "substring_dup": """
-            WITH toks AS (
-                SELECT doc_id,
-                       list_filter(string_split(text, ' '),
-                                   t -> t <> '') AS t
-                FROM documents),
-            sh AS (
-                -- coalesce: DuckDB's array_to_string([]) is NULL where
-                -- Spark's array_join([]) is '' — token-less docs must
-                -- keep their whole-doc window on both sides
-                SELECT doc_id,
-                       md5(coalesce(array_to_string(
-                           t[g.i:g.i + 7], ' '), '')) AS h
-                FROM toks,
-                LATERAL unnest(generate_series(
-                    1, greatest(len(t) - 7, 1))) AS g(i)),
-            cnt AS (SELECT h, count(*) AS c FROM sh GROUP BY h)
-            SELECT sh.doc_id,
-                   count(*)::BIGINT AS n_shingles,
-                   sum(CASE WHEN cnt.c >= 2 THEN 1 ELSE 0 END)::BIGINT
-                       AS dup_shingles,
-                   round(sum(CASE WHEN cnt.c >= 2 THEN 1 ELSE 0 END)
-                         ::DOUBLE / count(*), 6) AS dup_frac
-            FROM sh JOIN cnt USING (h)
-            GROUP BY sh.doc_id ORDER BY sh.doc_id""",
-        "unigram_logprob": """
-            WITH toks AS (
-                SELECT doc_id, t.term
-                FROM documents,
-                LATERAL unnest(string_split(text, ' ')) AS t(term)
-                WHERE t.term <> ''),
-            tf AS (SELECT doc_id, term, count(*) AS tf
-                   FROM toks GROUP BY 1, 2),
-            vocab AS (SELECT term, sum(tf) AS c FROM tf GROUP BY term),
-            scal AS (SELECT sum(c) AS T, count(*) AS V FROM vocab),
-            lp AS (SELECT term, ln((c + 1.0) / (scal.T + scal.V)) AS lp
-                   FROM vocab, scal)
-            SELECT tf.doc_id,
-                   sum(tf.tf)::BIGINT AS n_tokens,
-                   round(sum(tf.tf * lp.lp) / sum(tf.tf), 6) AS logprob
-            FROM tf JOIN lp USING (term)
-            GROUP BY tf.doc_id ORDER BY tf.doc_id""",
-        "llm_pipeline": f"""{geo},
+            FROM documents WHERE doc_id < 100 ORDER BY doc_id"""),
+        Query("llm_pipeline", q_llm_pipeline, f"""{geo},
             g2 AS (SELECT doc_id, lang, text, x, y, z,
                           len(string_split(text, ' '))::BIGINT AS ntok,
                           length(regexp_replace(text, '[^.,;:!?''"()-]',
@@ -1480,213 +1363,8 @@ def oracle_sql() -> dict[str, str]:
             SELECT r.q_id, r.rank::BIGINT AS rank, r.n_id, z.q_zbucket,
                    r.n_lang, 1::BIGINT AS complete
             FROM ranked r JOIN qz z ON r.q_id = z.q_id
-            WHERE r.rank <= 3 ORDER BY r.q_id, r.rank""",
-        "fingerprint": """
-            SELECT doc_id,
-                   list_aggregate(
-                     list_transform(
-                       generate_series(1, greatest(len(string_split(text,' ')) - 7, 1)),
-                       i -> md5(array_to_string(string_split(text,' ')[i:i+7], ' '))),
-                     'min') AS fp
-            FROM documents WHERE doc_id < 300 ORDER BY doc_id""",
-        "neardup_pairs": """
-            WITH g AS (
-                SELECT doc_id,
-                       list_distinct(list_transform(
-                         generate_series(1, greatest(len(string_split(text,' ')) - 4, 1)),
-                         i -> array_to_string(string_split(text,' ')[i:i+4], ' '))) AS sh
-                FROM documents WHERE doc_id < 1500),
-            p AS (
-                SELECT a.doc_id AS a, b.doc_id AS b,
-                       len(list_intersect(a.sh, b.sh))::DOUBLE
-                       / len(list_distinct(list_concat(a.sh, b.sh))) AS jac
-                FROM g a JOIN g b ON a.doc_id < b.doc_id)
-            SELECT a, b, round(jac, 4) AS jaccard FROM p
-            WHERE jac >= 0.9 ORDER BY a, b""",
-        "ngram_jaccard": """
-            WITH g AS (
-                SELECT doc_id,
-                       list_distinct(list_transform(
-                         generate_series(1, greatest(length(text) - 2, 1)),
-                         i -> text[i:i+2])) AS gr
-                FROM documents WHERE doc_id < 200),
-            p AS (
-                SELECT a.doc_id AS a, b.doc_id AS b,
-                       len(list_intersect(a.gr, b.gr))::DOUBLE
-                       / len(list_distinct(list_concat(a.gr, b.gr))) AS jac
-                FROM g a JOIN g b ON a.doc_id < b.doc_id)
-            SELECT a, b, round(jac, 4) AS jaccard FROM p
-            WHERE jac >= 0.8 ORDER BY a, b""",
-        "dedup_clusters": """
-            WITH RECURSIVE g AS (
-                SELECT doc_id,
-                       list_distinct(list_transform(
-                         generate_series(1, greatest(len(string_split(text,' ')) - 4, 1)),
-                         i -> array_to_string(string_split(text,' ')[i:i+4], ' '))) AS sh
-                FROM documents WHERE doc_id < 1500),
-            p AS (
-                SELECT a.doc_id AS a, b.doc_id AS b
-                FROM g a JOIN g b ON a.doc_id < b.doc_id
-                WHERE len(list_intersect(a.sh, b.sh))::DOUBLE
-                      / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.9),
-            e AS (SELECT a, b FROM p UNION ALL SELECT b AS a, a AS b FROM p),
-            reach(id, lbl) AS (
-                SELECT DISTINCT a, a FROM e
-                UNION
-                SELECT e.a, r.lbl FROM e JOIN reach r ON e.b = r.id)
-            SELECT id AS doc_id, min(lbl)::BIGINT AS cluster_id
-            FROM reach GROUP BY id ORDER BY doc_id""",
-        "knn_join": """
-            WITH q AS (SELECT vec_id AS q_id, embedding AS qv
-                       FROM embeddings WHERE vec_id < 20),
-            sims AS (
-                SELECT q.q_id, e.vec_id AS n_id,
-                       list_cosine_similarity(q.qv, e.embedding) AS cos
-                FROM q CROSS JOIN embeddings e),
-            ranked AS (
-                SELECT q_id, n_id,
-                       row_number() OVER (PARTITION BY q_id
-                           ORDER BY cos DESC, n_id ASC)::BIGINT AS rank
-                FROM sims)
-            SELECT q_id, n_id, rank FROM ranked WHERE rank <= 3
-            ORDER BY q_id, rank""",
-        "knn_points_grid": f"""{geo},
-            pts AS (SELECT doc_id AS point_id, x, y, z FROM geo),
-            q AS (SELECT point_id AS q_id, x AS qx, y AS qy, z AS qz
-                  FROM pts WHERE point_id < 6),
-            d AS (SELECT q.q_id, p.point_id AS n_id,
-                         sqrt(pow(p.x - q.qx, 2) + pow(p.y - q.qy, 2)
-                            + pow(p.z - q.qz, 2)) AS dist
-                  FROM q CROSS JOIN pts p),
-            ranked AS (
-                SELECT q_id, n_id,
-                       row_number() OVER (PARTITION BY q_id
-                           ORDER BY dist ASC, n_id ASC)::BIGINT AS rank
-                FROM d)
-            SELECT q_id, n_id, rank, 1::BIGINT AS complete
-            FROM ranked WHERE rank <= 4 ORDER BY q_id, rank""",
-        # exhaustive-probe config == exact kNN join: same oracle shape
-        "knn_join_bucketed": """
-            WITH q AS (SELECT vec_id AS q_id, embedding AS qv
-                       FROM embeddings WHERE vec_id < 20),
-            sims AS (
-                SELECT q.q_id, e.vec_id AS n_id,
-                       list_cosine_similarity(q.qv, e.embedding) AS cos
-                FROM q CROSS JOIN embeddings e),
-            ranked AS (
-                SELECT q_id, n_id,
-                       row_number() OVER (PARTITION BY q_id
-                           ORDER BY cos DESC, n_id ASC)::BIGINT AS rank
-                FROM sims)
-            SELECT q_id, n_id, rank FROM ranked WHERE rank <= 3
-            ORDER BY q_id, rank""",
-        "embedding_norms": """
-            SELECT label, count(*) AS n,
-                   round(avg(sqrt(list_sum(list_transform(embedding,
-                         v -> v::DOUBLE * v::DOUBLE)))), 6) AS avg_norm
-            FROM embeddings GROUP BY label ORDER BY label""",
-        "affine_transform": f"""{geo}
-            SELECT doc_id, round((x + 180.0) * 0.1, 6) AS tx,
-                   round((y + 85.0) * 0.1, 6) AS ty,
-                   round((z + 0.0) * 0.01, 6) AS tz
-            FROM geo ORDER BY doc_id LIMIT 500""",
-        "ecef_convert": f"""{geo}
-            SELECT doc_id,
-                   CAST(round((6378137.0 / sqrt(1.0 - 0.0066943799901413165 * sin(radians(y)) * sin(radians(y))) + z)
-                        * cos(radians(y)) * cos(radians(x)), 0) AS BIGINT) AS ecef_x,
-                   CAST(round((6378137.0 / sqrt(1.0 - 0.0066943799901413165 * sin(radians(y)) * sin(radians(y))) + z)
-                        * cos(radians(y)) * sin(radians(x)), 0) AS BIGINT) AS ecef_y,
-                   CAST(round((6378137.0 / sqrt(1.0 - 0.0066943799901413165 * sin(radians(y)) * sin(radians(y))) * (1.0 - 0.0066943799901413165) + z)
-                        * sin(radians(y)), 0) AS BIGINT) AS ecef_z
-            FROM geo WHERE doc_id < 500 ORDER BY doc_id""",
-        "utm_convert": _utm_oracle_sql(geo),
-        "matrix_transform": f"""{geo}
-            SELECT doc_id,
-                   round(0.8 * x + -0.6 * y + 0.0 * z, 6) AS rx,
-                   round(0.6 * x + 0.8 * y + 0.0 * z, 6) AS ry,
-                   round(0.0 * x + 0.0 * y + 1.0 * z, 6) AS rz
-            FROM geo WHERE doc_id < 500 ORDER BY doc_id""",
-        "fraction_sample": """
-            SELECT count(*) AS n_sampled, sum(n_chars)::BIGINT AS sum_chars
-            FROM documents WHERE (doc_id * 2654435761) % 100 < 20""",
-        "quadrant_route": f"""{geo}
-            SELECT (CASE WHEN x >= 0 THEN 4 ELSE 0 END
-                  + CASE WHEN y >= 0 THEN 2 ELSE 0 END)::BIGINT AS quadrant,
-                   count(*) AS n
-            FROM geo GROUP BY 1 ORDER BY quadrant""",
-        "tiling_invariants": f"""{geo}
-            SELECT count(*)::BIGINT AS n_assigned,
-                   count(DISTINCT doc_id)::BIGINT AS n_points,
-                   0::BIGINT AS bad_alphabet,
-                   0::BIGINT AS orphan_tiles
-            FROM geo""",
-        "simhash_neardup": """
-            WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 300
-                       UNION ALL
-                       SELECT doc_id + 1000, text FROM documents
-                       WHERE doc_id < 100),
-            ex AS (SELECT l.doc_id AS a, r.doc_id AS b
-                   FROM d l JOIN d r
-                     ON l.text = r.text AND l.doc_id < r.doc_id)
-            SELECT 0::BIGINT AS bad_order, 0::BIGINT AS bad_hamming,
-                   0::BIGINT AS dup_pairs,
-                   (SELECT count(*) FROM ex)::BIGINT AS exact_pairs,
-                   (SELECT count(*) FROM ex)::BIGINT AS exact_found_h0,
-                   0::BIGINT AS nondet_rows""",
-        "ann_lsh": """
-            SELECT 10::BIGINT AS n_results, 2::BIGINT AS self_found,
-                   0::BIGINT AS outside_bucket,
-                   1::BIGINT AS recall_floor_ok""",
-        "ann_ivf": """
-            SELECT 10::BIGINT AS n_results, 2::BIGINT AS self_found,
-                   0::BIGINT AS outside_list,
-                   0::BIGINT AS nondet_assignments,
-                   1::BIGINT AS recall_floor_ok""",
-        "s2_cells": f"""{geo}
-            SELECT {s2_sql} AS cell, count(*) AS n
-            FROM geo GROUP BY 1 ORDER BY cell""",
-        "geohash_cells": f"""{geo}
-            SELECT {gh_sql} AS gh, count(*) AS n
-            FROM geo GROUP BY 1 ORDER BY gh""",
-        "repetition_stats": """
-            WITH d AS (SELECT doc_id, lang,
-                              list_filter(string_split(text, ' '),
-                                          t -> t <> '') AS toks
-                       FROM documents WHERE doc_id < 400),
-            g AS (SELECT doc_id, lang,
-                         CASE WHEN len(toks) >= 3 THEN len(toks) - 2
-                              ELSE 0 END AS cnt, toks
-                  FROM d),
-            frac AS (SELECT doc_id, lang,
-                round(CASE WHEN cnt <= 0 THEN 0.0
-                      ELSE 1.0 - len(list_distinct(list_transform(
-                               range(1, cnt + 1),
-                               i -> toks[i] || ' ' || toks[i+1]
-                                    || ' ' || toks[i+2])))
-                           / CAST(cnt AS DOUBLE) END, 6) AS f
-                FROM g)
-            SELECT lang, round(avg(f), 6) AS avg_dup3,
-                   max(f) AS max_dup3, count(*) AS n
-            FROM frac GROUP BY lang ORDER BY lang""",
-        "salted_join": """
-            WITH dim AS (SELECT DISTINCT user_id,
-                                (user_id % 4)::BIGINT AS tier FROM events)
-            SELECT tier, count(*) AS n, round(sum(value), 4) AS total
-            FROM events e JOIN dim USING (user_id)
-            GROUP BY tier ORDER BY tier""",
-        "zorder_key": f"""{geo}, q AS (
-                SELECT least(greatest(CAST(floor((x - (-180.0)) / 360.0
-                           * 256) AS BIGINT), 0), 255) AS qx,
-                       least(greatest(CAST(floor((y - (-90.0)) / 180.0
-                           * 256) AS BIGINT), 0), 255) AS qy
-                FROM geo),
-            k AS (SELECT ({" | ".join(
-                f"(((qx >> {b}) & 1) << {2 * b}) | "
-                f"(((qy >> {b}) & 1) << {2 * b + 1})"
-                for b in range(8))}) AS zkey FROM q)
-            SELECT (zkey >> 8) AS zbucket, count(*) AS n
-            FROM k GROUP BY 1 ORDER BY zbucket""",
-        "tfidf_terms": """
+            WHERE r.rank <= 3 ORDER BY r.q_id, r.rank"""),
+        Query("tfidf_terms", q_tfidf_terms, """
             WITH d AS (SELECT doc_id, text FROM documents
                        WHERE doc_id < 200),
             toks AS (SELECT doc_id, t.term
@@ -1708,71 +1386,235 @@ def oracle_sql() -> dict[str, str]:
                            ORDER BY score DESC, term ASC)::BIGINT AS rk
                 FROM scored)
             SELECT doc_id, term, tf, score, rk FROM ranked
-            WHERE rk <= 3 ORDER BY doc_id, rk""",
-        "domain_stats": """
-            WITH u AS (
-                SELECT doc_id, n_chars,
-                       'site' || CAST(doc_id % 3 AS VARCHAR)
-                           || '.example' AS domain,
-                       'h' || CAST(doc_id % 7 AS VARCHAR) || '.site'
-                           || CAST(doc_id % 3 AS VARCHAR)
-                           || '.example' AS host
-                FROM documents)
-            SELECT domain, count(*) AS docs,
-                   count(DISTINCT host) AS hosts,
-                   sum(n_chars)::BIGINT AS total_chars
-            FROM u WHERE domain <> 'site2.example'
-            GROUP BY domain ORDER BY domain""",
-        "raster_cells": f"""{geo}{_RASTER_CELLS_SQL}
-            SELECT cell_x, cell_y, value FROM cells
-            ORDER BY cell_x, cell_y""",
-        "raster_pyramid": f"""{geo}{_RASTER_CELLS_SQL}
-            SELECT level, count(*)::BIGINT AS n_cells, sum(value) AS total,
-                   min(cell_x) AS min_cx, max(cell_y) AS max_cy
-            FROM (
-                SELECT 0 AS level, cell_x, cell_y, value FROM cells
-                UNION ALL SELECT 1, CAST(floor(cell_x/2.0) AS BIGINT),
-                    CAST(floor(cell_y/2.0) AS BIGINT), sum(value)
-                    FROM cells GROUP BY 2, 3
-                UNION ALL SELECT 2, CAST(floor(cell_x/4.0) AS BIGINT),
-                    CAST(floor(cell_y/4.0) AS BIGINT), sum(value)
-                    FROM cells GROUP BY 2, 3
-                UNION ALL SELECT 3, CAST(floor(cell_x/8.0) AS BIGINT),
-                    CAST(floor(cell_y/8.0) AS BIGINT), sum(value)
-                    FROM cells GROUP BY 2, 3)
-            GROUP BY level ORDER BY level""",
-        "raster_vectorize": f"""{geo}{_RASTER_CELLS_SQL},
-            runs AS (
-                SELECT cell_y, min(cell_x) AS x0, max(cell_x) AS x1
-                FROM (SELECT cell_x, cell_y, cell_x - row_number()
-                          OVER (PARTITION BY cell_y ORDER BY cell_x) AS k
-                      FROM cells)
-                GROUP BY cell_y, k),
-            rects AS (
-                SELECT x0, x1, min(cell_y) AS y0, max(cell_y) AS y1
-                FROM (SELECT x0, x1, cell_y, cell_y - row_number()
-                          OVER (PARTITION BY x0, x1 ORDER BY cell_y) AS k
-                      FROM runs)
-                GROUP BY x0, x1, k)
-            SELECT x0, x1, y0, y1,
-                   (x1 - x0 + 1) * (y1 - y0 + 1) AS n_cells
-            FROM rects ORDER BY x0, x1, y0""",
-        "union_dedup": """
+            WHERE rk <= 3 ORDER BY doc_id, rk"""),
+        Query("repetition_stats", q_repetition_stats, """
+            WITH d AS (SELECT doc_id, lang,
+                              list_filter(string_split(text, ' '),
+                                          t -> t <> '') AS toks
+                       FROM documents WHERE doc_id < 400),
+            g AS (SELECT doc_id, lang,
+                         CASE WHEN len(toks) >= 3 THEN len(toks) - 2
+                              ELSE 0 END AS cnt, toks
+                  FROM d),
+            frac AS (SELECT doc_id, lang,
+                round(CASE WHEN cnt <= 0 THEN 0.0
+                      ELSE 1.0 - len(list_distinct(list_transform(
+                               range(1, cnt + 1),
+                               i -> toks[i] || ' ' || toks[i+1]
+                                    || ' ' || toks[i+2])))
+                           / CAST(cnt AS DOUBLE) END, 6) AS f
+                FROM g)
+            SELECT lang, round(avg(f), 6) AS avg_dup3,
+                   max(f) AS max_dup3, count(*) AS n
+            FROM frac GROUP BY lang ORDER BY lang"""),
+        Query("fingerprint", q_fingerprint, """
+            SELECT doc_id,
+                   list_aggregate(
+                     list_transform(
+                       generate_series(1, greatest(len(string_split(text,' ')) - 7, 1)),
+                       i -> md5(array_to_string(string_split(text,' ')[i:i+7], ' '))),
+                     'min') AS fp
+            FROM documents WHERE doc_id < 300 ORDER BY doc_id"""),
+        Query("substring_dup", q_substring_dup, """
+            WITH toks AS (
+                SELECT doc_id,
+                       list_filter(string_split(text, ' '),
+                                   t -> t <> '') AS t
+                FROM documents),
+            sh AS (
+                -- coalesce: DuckDB's array_to_string([]) is NULL where
+                -- Spark's array_join([]) is '' — token-less docs must
+                -- keep their whole-doc window on both sides
+                SELECT doc_id,
+                       md5(coalesce(array_to_string(
+                           t[g.i:g.i + 7], ' '), '')) AS h
+                FROM toks,
+                LATERAL unnest(generate_series(
+                    1, greatest(len(t) - 7, 1))) AS g(i)),
+            cnt AS (SELECT h, count(*) AS c FROM sh GROUP BY h)
+            SELECT sh.doc_id,
+                   count(*)::BIGINT AS n_shingles,
+                   sum(CASE WHEN cnt.c >= 2 THEN 1 ELSE 0 END)::BIGINT
+                       AS dup_shingles,
+                   round(sum(CASE WHEN cnt.c >= 2 THEN 1 ELSE 0 END)
+                         ::DOUBLE / count(*), 6) AS dup_frac
+            FROM sh JOIN cnt USING (h)
+            GROUP BY sh.doc_id ORDER BY sh.doc_id"""),
+        Query("unigram_logprob", q_unigram_logprob, """
+            WITH toks AS (
+                SELECT doc_id, t.term
+                FROM documents,
+                LATERAL unnest(string_split(text, ' ')) AS t(term)
+                WHERE t.term <> ''),
+            tf AS (SELECT doc_id, term, count(*) AS tf
+                   FROM toks GROUP BY 1, 2),
+            vocab AS (SELECT term, sum(tf) AS c FROM tf GROUP BY term),
+            scal AS (SELECT sum(c) AS T, count(*) AS V FROM vocab),
+            lp AS (SELECT term, ln((c + 1.0) / (scal.T + scal.V)) AS lp
+                   FROM vocab, scal)
+            SELECT tf.doc_id,
+                   sum(tf.tf)::BIGINT AS n_tokens,
+                   round(sum(tf.tf * lp.lp) / sum(tf.tf), 6) AS logprob
+            FROM tf JOIN lp USING (term)
+            GROUP BY tf.doc_id ORDER BY tf.doc_id"""),
+        Query("neardup_pairs", q_neardup_pairs, """
+            WITH g AS (
+                SELECT doc_id,
+                       list_distinct(list_transform(
+                         generate_series(1, greatest(len(string_split(text,' ')) - 4, 1)),
+                         i -> array_to_string(string_split(text,' ')[i:i+4], ' '))) AS sh
+                FROM documents WHERE doc_id < 1500),
+            p AS (
+                SELECT a.doc_id AS a, b.doc_id AS b,
+                       len(list_intersect(a.sh, b.sh))::DOUBLE
+                       / len(list_distinct(list_concat(a.sh, b.sh))) AS jac
+                FROM g a JOIN g b ON a.doc_id < b.doc_id)
+            SELECT a, b, round(jac, 4) AS jaccard FROM p
+            WHERE jac >= 0.9 ORDER BY a, b"""),
+        Query("ngram_jaccard", q_ngram_jaccard, """
+            WITH g AS (
+                SELECT doc_id,
+                       list_distinct(list_transform(
+                         generate_series(1, greatest(length(text) - 2, 1)),
+                         i -> text[i:i+2])) AS gr
+                FROM documents WHERE doc_id < 200),
+            p AS (
+                SELECT a.doc_id AS a, b.doc_id AS b,
+                       len(list_intersect(a.gr, b.gr))::DOUBLE
+                       / len(list_distinct(list_concat(a.gr, b.gr))) AS jac
+                FROM g a JOIN g b ON a.doc_id < b.doc_id)
+            SELECT a, b, round(jac, 4) AS jaccard FROM p
+            WHERE jac >= 0.8 ORDER BY a, b"""),
+        Query("dedup_clusters", q_dedup_clusters, """
+            WITH RECURSIVE g AS (
+                SELECT doc_id,
+                       list_distinct(list_transform(
+                         generate_series(1, greatest(len(string_split(text,' ')) - 4, 1)),
+                         i -> array_to_string(string_split(text,' ')[i:i+4], ' '))) AS sh
+                FROM documents WHERE doc_id < 1500),
+            p AS (
+                SELECT a.doc_id AS a, b.doc_id AS b
+                FROM g a JOIN g b ON a.doc_id < b.doc_id
+                WHERE len(list_intersect(a.sh, b.sh))::DOUBLE
+                      / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.9),
+            e AS (SELECT a, b FROM p UNION ALL SELECT b AS a, a AS b FROM p),
+            reach(id, lbl) AS (
+                SELECT DISTINCT a, a FROM e
+                UNION
+                SELECT e.a, r.lbl FROM e JOIN reach r ON e.b = r.id)
+            SELECT id AS doc_id, min(lbl)::BIGINT AS cluster_id
+            FROM reach GROUP BY id ORDER BY doc_id"""),
+        Query("knn_join", q_knn_join, """
+            WITH q AS (SELECT vec_id AS q_id, embedding AS qv
+                       FROM embeddings WHERE vec_id < 20),
+            sims AS (
+                SELECT q.q_id, e.vec_id AS n_id,
+                       list_cosine_similarity(q.qv, e.embedding) AS cos
+                FROM q CROSS JOIN embeddings e),
+            ranked AS (
+                SELECT q_id, n_id,
+                       row_number() OVER (PARTITION BY q_id
+                           ORDER BY cos DESC, n_id ASC)::BIGINT AS rank
+                FROM sims)
+            SELECT q_id, n_id, rank FROM ranked WHERE rank <= 3
+            ORDER BY q_id, rank"""),
+        # exhaustive-probe config == exact kNN join: same oracle shape
+        Query("knn_join_bucketed", q_knn_join_bucketed, """
+            WITH q AS (SELECT vec_id AS q_id, embedding AS qv
+                       FROM embeddings WHERE vec_id < 20),
+            sims AS (
+                SELECT q.q_id, e.vec_id AS n_id,
+                       list_cosine_similarity(q.qv, e.embedding) AS cos
+                FROM q CROSS JOIN embeddings e),
+            ranked AS (
+                SELECT q_id, n_id,
+                       row_number() OVER (PARTITION BY q_id
+                           ORDER BY cos DESC, n_id ASC)::BIGINT AS rank
+                FROM sims)
+            SELECT q_id, n_id, rank FROM ranked WHERE rank <= 3
+            ORDER BY q_id, rank"""),
+        Query("knn_points_grid", q_knn_points_grid, f"""{geo},
+            pts AS (SELECT doc_id AS point_id, x, y, z FROM geo),
+            q AS (SELECT point_id AS q_id, x AS qx, y AS qy, z AS qz
+                  FROM pts WHERE point_id < 6),
+            d AS (SELECT q.q_id, p.point_id AS n_id,
+                         sqrt(pow(p.x - q.qx, 2) + pow(p.y - q.qy, 2)
+                            + pow(p.z - q.qz, 2)) AS dist
+                  FROM q CROSS JOIN pts p),
+            ranked AS (
+                SELECT q_id, n_id,
+                       row_number() OVER (PARTITION BY q_id
+                           ORDER BY dist ASC, n_id ASC)::BIGINT AS rank
+                FROM d)
+            SELECT q_id, n_id, rank, 1::BIGINT AS complete
+            FROM ranked WHERE rank <= 4 ORDER BY q_id, rank"""),
+        Query("embedding_norms", q_embedding_norms, """
+            SELECT label, count(*) AS n,
+                   round(avg(sqrt(list_sum(list_transform(embedding,
+                         v -> v::DOUBLE * v::DOUBLE)))), 6) AS avg_norm
+            FROM embeddings GROUP BY label ORDER BY label"""),
+        Query("affine_transform", q_affine_transform, f"""{geo}
+            SELECT doc_id, round((x + 180.0) * 0.1, 6) AS tx,
+                   round((y + 85.0) * 0.1, 6) AS ty,
+                   round((z + 0.0) * 0.01, 6) AS tz
+            FROM geo ORDER BY doc_id LIMIT 500"""),
+        Query("ecef_convert", q_ecef_convert, f"""{geo}
+            SELECT doc_id,
+                   CAST(round((6378137.0 / sqrt(1.0 - 0.0066943799901413165 * sin(radians(y)) * sin(radians(y))) + z)
+                        * cos(radians(y)) * cos(radians(x)), 0) AS BIGINT) AS ecef_x,
+                   CAST(round((6378137.0 / sqrt(1.0 - 0.0066943799901413165 * sin(radians(y)) * sin(radians(y))) + z)
+                        * cos(radians(y)) * sin(radians(x)), 0) AS BIGINT) AS ecef_y,
+                   CAST(round((6378137.0 / sqrt(1.0 - 0.0066943799901413165 * sin(radians(y)) * sin(radians(y))) * (1.0 - 0.0066943799901413165) + z)
+                        * sin(radians(y)), 0) AS BIGINT) AS ecef_z
+            FROM geo WHERE doc_id < 500 ORDER BY doc_id"""),
+        Query("utm_convert", q_utm_convert, _utm_oracle_sql(geo)),
+        Query("matrix_transform", q_matrix_transform, f"""{geo}
+            SELECT doc_id,
+                   round(0.8 * x + -0.6 * y + 0.0 * z, 6) AS rx,
+                   round(0.6 * x + 0.8 * y + 0.0 * z, 6) AS ry,
+                   round(0.0 * x + 0.0 * y + 1.0 * z, 6) AS rz
+            FROM geo WHERE doc_id < 500 ORDER BY doc_id"""),
+        Query("fraction_sample", q_fraction_sample, """
+            SELECT count(*) AS n_sampled, sum(n_chars)::BIGINT AS sum_chars
+            FROM documents WHERE (doc_id * 2654435761) % 100 < 20"""),
+        Query("quadrant_route", q_quadrant_route, f"""{geo}
+            SELECT (CASE WHEN x >= 0 THEN 4 ELSE 0 END
+                  + CASE WHEN y >= 0 THEN 2 ELSE 0 END)::BIGINT AS quadrant,
+                   count(*) AS n
+            FROM geo GROUP BY 1 ORDER BY quadrant"""),
+        Query("union_dedup", q_union_dedup, """
             WITH u AS (
                 SELECT doc_id, lang FROM documents WHERE doc_id < 300
                 UNION ALL
                 SELECT doc_id, lang FROM documents
                 WHERE doc_id >= 150 AND doc_id < 450)
             SELECT count(*) AS n_rows,
-                   count(DISTINCT doc_id) AS n_distinct FROM u""",
-        "vector_triangulate": f"""{geo}
+                   count(DISTINCT doc_id) AS n_distinct FROM u"""),
+        Query("event_sessions", q_event_sessions, """
+            WITH g AS (
+                SELECT user_id, ts,
+                       epoch(ts)::BIGINT
+                       - lag(epoch(ts)::BIGINT) OVER (PARTITION BY user_id
+                                                      ORDER BY ts) AS gap
+                FROM events),
+            s AS (
+                SELECT user_id,
+                       sum(CASE WHEN gap IS NULL OR gap > 1800 THEN 1
+                                ELSE 0 END)
+                           OVER (PARTITION BY user_id ORDER BY ts
+                                 ROWS UNBOUNDED PRECEDING) AS session_no
+                FROM g)
+            SELECT user_id, max(session_no)::BIGINT AS n_sessions,
+                   count(*) AS n_events
+            FROM s GROUP BY user_id ORDER BY user_id"""),
+        Query("vector_triangulate", q_vector_triangulate, f"""{geo}
             SELECT doc_id AS geom_id, 2::BIGINT AS n_tris,
                    round(CAST(x AS REAL)::DOUBLE, 6) AS bx0,
                    round(CAST(y AS REAL)::DOUBLE, 6) AS by0,
                    round(CAST(x + 1.0 AS REAL)::DOUBLE, 6) AS bx1,
                    round(CAST(y + 0.5 AS REAL)::DOUBLE, 6) AS by1
-            FROM geo WHERE doc_id < 2000 ORDER BY geom_id""",
-        "feature_quadtree": f"""{geo}, f AS (
+            FROM geo WHERE doc_id < 2000 ORDER BY geom_id"""),
+        Query("feature_quadtree", q_feature_quadtree, f"""{geo}, f AS (
                 SELECT doc_id AS geom_id,
                        ((x-0.05) + (x+0.05)) * 0.5 AS cx,
                        ((y-0.05) + (y+0.05)) * 0.5 AS cy,
@@ -1800,8 +1642,8 @@ def oracle_sql() -> dict[str, str]:
                    floor((cx - xmin)/11.25)::BIGINT,
                    floor((cy - ymin)/11.25)::BIGINT
             FROM r1 WHERE rk1 > 20
-            ORDER BY geom_id""",
-        "vector_b3dm": f"""{geo}, f AS (
+            ORDER BY geom_id"""),
+        Query("vector_b3dm", q_vector_b3dm, f"""{geo}, f AS (
                 SELECT doc_id AS geom_id,
                        (CAST(x-0.05 AS REAL)::DOUBLE
                         + CAST(x+0.05 AS REAL)::DOUBLE) * 0.5 AS cx,
@@ -1834,34 +1676,113 @@ def oracle_sql() -> dict[str, str]:
                        || '/' || CAST(floor((cy - ymin)/11.25)::BIGINT AS VARCHAR)
                 FROM r1 WHERE rk1 > 20)
             SELECT node_id, count(*) AS n_features, TRUE AS has_payload
-            FROM nodes GROUP BY node_id ORDER BY node_id""",
-        "event_sessions": """
-            WITH g AS (
-                SELECT user_id, ts,
-                       epoch(ts)::BIGINT
-                       - lag(epoch(ts)::BIGINT) OVER (PARTITION BY user_id
-                                                      ORDER BY ts) AS gap
-                FROM events),
-            s AS (
-                SELECT user_id,
-                       sum(CASE WHEN gap IS NULL OR gap > 1800 THEN 1
-                                ELSE 0 END)
-                           OVER (PARTITION BY user_id ORDER BY ts
-                                 ROWS UNBOUNDED PRECEDING) AS session_no
-                FROM g)
-            SELECT user_id, max(session_no)::BIGINT AS n_sessions,
-                   count(*) AS n_events
-            FROM s GROUP BY user_id ORDER BY user_id""",
-        # r6: the octree build's per-tile histogram, recomputed by DuckDB
-        # straight from the accepted=true level-checkpoint partitions the
-        # Spark query just wrote (the driver runs the Spark side first,
-        # which rebuilds the checkpoint at this deterministic per-process
-        # path). This pins returned-assignments == durably-written-
-        # checkpoint; the order-dependent accept itself stays pinned by
-        # the replay goldens. The sf dir defaults to the driver's sf0.01
-        # gate; SPARK_GRAFT_ORACLE_SF_DIR overrides it (check_oracle.py
-        # sets it so the twin follows any sf).
-        "tiling_octree": f"""
+            FROM nodes GROUP BY node_id ORDER BY node_id"""),
+        Query("tiling_invariants", q_tiling_invariants, f"""{geo}
+            SELECT count(*)::BIGINT AS n_assigned,
+                   count(DISTINCT doc_id)::BIGINT AS n_points,
+                   0::BIGINT AS bad_alphabet,
+                   0::BIGINT AS orphan_tiles
+            FROM geo"""),
+        Query("s2_cells", q_s2_cells, f"""{geo}
+            SELECT {s2_sql} AS cell, count(*) AS n
+            FROM geo GROUP BY 1 ORDER BY cell"""),
+        Query("geohash_cells", q_geohash_cells, f"""{geo}
+            SELECT {gh_sql} AS gh, count(*) AS n
+            FROM geo GROUP BY 1 ORDER BY gh"""),
+        Query("domain_stats", q_domain_stats, """
+            WITH u AS (
+                SELECT doc_id, n_chars,
+                       'site' || CAST(doc_id % 3 AS VARCHAR)
+                           || '.example' AS domain,
+                       'h' || CAST(doc_id % 7 AS VARCHAR) || '.site'
+                           || CAST(doc_id % 3 AS VARCHAR)
+                           || '.example' AS host
+                FROM documents)
+            SELECT domain, count(*) AS docs,
+                   count(DISTINCT host) AS hosts,
+                   sum(n_chars)::BIGINT AS total_chars
+            FROM u WHERE domain <> 'site2.example'
+            GROUP BY domain ORDER BY domain"""),
+        Query("salted_join", q_salted_join, """
+            WITH dim AS (SELECT DISTINCT user_id,
+                                (user_id % 4)::BIGINT AS tier FROM events)
+            SELECT tier, count(*) AS n, round(sum(value), 4) AS total
+            FROM events e JOIN dim USING (user_id)
+            GROUP BY tier ORDER BY tier"""),
+        Query("zorder_key", q_zorder_key, f"""{geo}, q AS (
+                SELECT least(greatest(CAST(floor((x - (-180.0)) / 360.0
+                           * 256) AS BIGINT), 0), 255) AS qx,
+                       least(greatest(CAST(floor((y - (-90.0)) / 180.0
+                           * 256) AS BIGINT), 0), 255) AS qy
+                FROM geo),
+            k AS (SELECT ({" | ".join(
+                f"(((qx >> {b}) & 1) << {2 * b}) | "
+                f"(((qy >> {b}) & 1) << {2 * b + 1})"
+                for b in range(8))}) AS zkey FROM q)
+            SELECT (zkey >> 8) AS zbucket, count(*) AS n
+            FROM k GROUP BY 1 ORDER BY zbucket"""),
+        Query("raster_cells", q_raster_cells, f"""{geo}{_RASTER_CELLS_SQL}
+            SELECT cell_x, cell_y, value FROM cells
+            ORDER BY cell_x, cell_y"""),
+        Query("raster_pyramid", q_raster_pyramid, f"""{geo}{_RASTER_CELLS_SQL}
+            SELECT level, count(*)::BIGINT AS n_cells, sum(value) AS total,
+                   min(cell_x) AS min_cx, max(cell_y) AS max_cy
+            FROM (
+                SELECT 0 AS level, cell_x, cell_y, value FROM cells
+                UNION ALL SELECT 1, CAST(floor(cell_x/2.0) AS BIGINT),
+                    CAST(floor(cell_y/2.0) AS BIGINT), sum(value)
+                    FROM cells GROUP BY 2, 3
+                UNION ALL SELECT 2, CAST(floor(cell_x/4.0) AS BIGINT),
+                    CAST(floor(cell_y/4.0) AS BIGINT), sum(value)
+                    FROM cells GROUP BY 2, 3
+                UNION ALL SELECT 3, CAST(floor(cell_x/8.0) AS BIGINT),
+                    CAST(floor(cell_y/8.0) AS BIGINT), sum(value)
+                    FROM cells GROUP BY 2, 3)
+            GROUP BY level ORDER BY level"""),
+        Query("raster_vectorize", q_raster_vectorize, f"""{geo}{_RASTER_CELLS_SQL},
+            runs AS (
+                SELECT cell_y, min(cell_x) AS x0, max(cell_x) AS x1
+                FROM (SELECT cell_x, cell_y, cell_x - row_number()
+                          OVER (PARTITION BY cell_y ORDER BY cell_x) AS k
+                      FROM cells)
+                GROUP BY cell_y, k),
+            rects AS (
+                SELECT x0, x1, min(cell_y) AS y0, max(cell_y) AS y1
+                FROM (SELECT x0, x1, cell_y, cell_y - row_number()
+                          OVER (PARTITION BY x0, x1 ORDER BY cell_y) AS k
+                      FROM runs)
+                GROUP BY x0, x1, k)
+            SELECT x0, x1, y0, y1,
+                   (x1 - x0 + 1) * (y1 - y0 + 1) AS n_cells
+            FROM rects ORDER BY x0, x1, y0"""),
+        Query("simhash_neardup", q_simhash_neardup, """
+            WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 300
+                       UNION ALL
+                       SELECT doc_id + 1000, text FROM documents
+                       WHERE doc_id < 100),
+            ex AS (SELECT l.doc_id AS a, r.doc_id AS b
+                   FROM d l JOIN d r
+                     ON l.text = r.text AND l.doc_id < r.doc_id)
+            SELECT 0::BIGINT AS bad_order, 0::BIGINT AS bad_hamming,
+                   0::BIGINT AS dup_pairs,
+                   (SELECT count(*) FROM ex)::BIGINT AS exact_pairs,
+                   (SELECT count(*) FROM ex)::BIGINT AS exact_found_h0,
+                   0::BIGINT AS nondet_rows"""),
+        Query("ann_lsh", q_ann_lsh, """
+            SELECT 10::BIGINT AS n_results, 2::BIGINT AS self_found,
+                   0::BIGINT AS outside_bucket,
+                   1::BIGINT AS recall_floor_ok"""),
+        Query("ann_ivf", q_ann_ivf, """
+            SELECT 10::BIGINT AS n_results, 2::BIGINT AS self_found,
+                   0::BIGINT AS outside_list,
+                   0::BIGINT AS nondet_assignments,
+                   1::BIGINT AS recall_floor_ok"""),
+        # the per-tile histogram, recomputed by DuckDB from the
+        # accepted=true level-checkpoint partitions the Spark query just
+        # wrote: returned assignments == durably written checkpoint. The
+        # sf dir defaults to the sf0.01 gate tables;
+        # SPARK_GRAFT_ORACLE_SF_DIR overrides it.
+        Query("tiling_octree", q_tiling_octree, f"""
             SELECT tile_id, count(*)::BIGINT AS point_count
             FROM read_parquet(
                 '{_octree_ckpt_dir(os.environ.get(
@@ -1869,32 +1790,72 @@ def oracle_sql() -> dict[str, str]:
                     "/root/testdata/sf0.01"))}'
                 || '/level=*/out/accepted=true/*.parquet',
                 hive_partitioning = 0)
-            GROUP BY tile_id ORDER BY tile_id""",
-    }
-
-
-def legacy_oracle_sql() -> dict[str, str]:
-    """DuckDB twins for legacy_queries() — retired from the driver gate
-    (see legacy_queries docstring) but kept runnable so the pytest parity
-    test can still cross-check them any time."""
-    return {
-        "top_ngrams": """
-            WITH toks AS (
-                SELECT list_filter(string_split(text, ' '),
-                                   t -> t <> '') AS t
-                FROM documents),
-            g AS (
-                SELECT array_to_string(t[i.i:i.i + 1], ' ') AS ngram
-                FROM toks,
-                LATERAL unnest(generate_series(1, len(t) - 1)) AS i(i)
-                WHERE len(t) >= 2),
-            c AS (SELECT ngram, count(*)::BIGINT AS cnt
-                  FROM g GROUP BY ngram)
-            SELECT ngram, cnt,
-                   row_number() OVER (ORDER BY cnt DESC, ngram ASC)
-                       ::BIGINT AS rank
-            FROM c ORDER BY cnt DESC, ngram ASC LIMIT 20""",
-        "decontaminate": """
+            GROUP BY tile_id ORDER BY tile_id"""),
+        Query("hourly_events", q_hourly_events, """
+            SELECT date_trunc('hour', ts) AS hour, count(*) AS n_events,
+                   round(sum(value), 4) AS sum_value,
+                   count(DISTINCT user_id) AS n_users
+            FROM events GROUP BY 1 ORDER BY hour""", gated=False),
+        Query("top_users", q_top_users, """
+            SELECT user_id, total, n, rk FROM (
+                SELECT user_id, round(sum(value), 4) AS total,
+                       count(*) AS n,
+                       row_number() OVER (ORDER BY round(sum(value), 4) DESC,
+                                          user_id ASC)::BIGINT AS rk
+                FROM events GROUP BY user_id)
+            WHERE rk <= 10 ORDER BY rk""", gated=False),
+        Query("pricing_summary", q_pricing_summary, """
+            SELECT l_returnflag, l_linestatus,
+                   sum(l_quantity) AS sum_qty,
+                   round(sum(l_extendedprice), 2) AS sum_base_price,
+                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
+                   round(avg(l_discount), 6) AS avg_disc,
+                   count(*) AS count_order
+            FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+            GROUP BY l_returnflag, l_linestatus
+            ORDER BY l_returnflag, l_linestatus""", gated=False),
+        Query("lang_source_cube", q_lang_source_cube, """
+            SELECT lang, source, count(*) AS n FROM documents
+            GROUP BY lang, source ORDER BY lang, source""", gated=False),
+        Query("customer_order_join", q_customer_order_join, """
+            SELECT c_mktsegment, count(*) AS n_orders,
+                   round(sum(o_totalprice), 2) AS revenue
+            FROM orders JOIN customer ON o_custkey = c_custkey
+            GROUP BY c_mktsegment ORDER BY c_mktsegment""", gated=False),
+        Query("knn_top5", q_knn_top5, """
+            WITH q AS (SELECT vec_id AS q_id, embedding AS qv
+                       FROM embeddings WHERE vec_id IN (0, 7)),
+            sims AS (
+                SELECT q.q_id, e.vec_id AS n_id,
+                       list_cosine_similarity(q.qv, e.embedding) AS cos
+                FROM q CROSS JOIN embeddings e),
+            ranked AS (
+                SELECT q_id, n_id,
+                       row_number() OVER (PARTITION BY q_id
+                           ORDER BY cos DESC, n_id ASC)::BIGINT AS rank
+                FROM sims)
+            SELECT q_id, n_id, rank FROM ranked WHERE rank <= 5
+            ORDER BY q_id, rank""", gated=False),
+        Query("corpus_curation", q_corpus_curation, """
+            WITH q AS (
+                SELECT doc_id, lang, text,
+                       len(string_split(text, ' '))::BIGINT AS ntok,
+                       length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g'))
+                           ::DOUBLE / greatest(length(text), 1) AS punct_ratio
+                FROM documents
+                WHERE length(text) >= 80),
+            gated AS (
+                SELECT * FROM q WHERE ntok >= 10 AND punct_ratio <= 0.2),
+            kept AS (
+                SELECT * FROM (
+                    SELECT *, row_number() OVER (PARTITION BY md5(text)
+                                                 ORDER BY doc_id) AS rk
+                    FROM gated) WHERE rk = 1)
+            SELECT lang, count(*)::BIGINT AS kept_docs,
+                   sum(ntok)::BIGINT AS token_budget,
+                   min(doc_id) AS first_doc
+            FROM kept GROUP BY lang ORDER BY lang""", gated=False),
+        Query("decontaminate", q_decontaminate, """
             WITH toks AS (
                 SELECT doc_id,
                        list_filter(string_split(text, ' '),
@@ -1915,69 +1876,37 @@ def legacy_oracle_sql() -> dict[str, str]:
                    CAST(sum(CASE WHEN eh.h IS NOT NULL THEN 1 ELSE 0 END)
                         > 0 AS BIGINT) AS is_contaminated
             FROM sh LEFT JOIN eh USING (h)
-            GROUP BY sh.doc_id ORDER BY sh.doc_id""",
-        "knn_top5": """
-            WITH q AS (SELECT vec_id AS q_id, embedding AS qv
-                       FROM embeddings WHERE vec_id IN (0, 7)),
-            sims AS (
-                SELECT q.q_id, e.vec_id AS n_id,
-                       list_cosine_similarity(q.qv, e.embedding) AS cos
-                FROM q CROSS JOIN embeddings e),
-            ranked AS (
-                SELECT q_id, n_id,
-                       row_number() OVER (PARTITION BY q_id
-                           ORDER BY cos DESC, n_id ASC)::BIGINT AS rank
-                FROM sims)
-            SELECT q_id, n_id, rank FROM ranked WHERE rank <= 5
-            ORDER BY q_id, rank""",
-        "corpus_curation": """
-            WITH q AS (
-                SELECT doc_id, lang, text,
-                       len(string_split(text, ' '))::BIGINT AS ntok,
-                       length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g'))
-                           ::DOUBLE / greatest(length(text), 1) AS punct_ratio
-                FROM documents
-                WHERE length(text) >= 80),
-            gated AS (
-                SELECT * FROM q WHERE ntok >= 10 AND punct_ratio <= 0.2),
-            kept AS (
-                SELECT * FROM (
-                    SELECT *, row_number() OVER (PARTITION BY md5(text)
-                                                 ORDER BY doc_id) AS rk
-                    FROM gated) WHERE rk = 1)
-            SELECT lang, count(*)::BIGINT AS kept_docs,
-                   sum(ntok)::BIGINT AS token_budget,
-                   min(doc_id) AS first_doc
-            FROM kept GROUP BY lang ORDER BY lang""",
-        "hourly_events": """
-            SELECT date_trunc('hour', ts) AS hour, count(*) AS n_events,
-                   round(sum(value), 4) AS sum_value,
-                   count(DISTINCT user_id) AS n_users
-            FROM events GROUP BY 1 ORDER BY hour""",
-        "top_users": """
-            SELECT user_id, total, n, rk FROM (
-                SELECT user_id, round(sum(value), 4) AS total,
-                       count(*) AS n,
-                       row_number() OVER (ORDER BY round(sum(value), 4) DESC,
-                                          user_id ASC)::BIGINT AS rk
-                FROM events GROUP BY user_id)
-            WHERE rk <= 10 ORDER BY rk""",
-        "pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   sum(l_quantity) AS sum_qty,
-                   round(sum(l_extendedprice), 2) AS sum_base_price,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-                   round(avg(l_discount), 6) AS avg_disc,
-                   count(*) AS count_order
-            FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
-            ORDER BY l_returnflag, l_linestatus""",
-        "lang_source_cube": """
-            SELECT lang, source, count(*) AS n FROM documents
-            GROUP BY lang, source ORDER BY lang, source""",
-        "customer_order_join": """
-            SELECT c_mktsegment, count(*) AS n_orders,
-                   round(sum(o_totalprice), 2) AS revenue
-            FROM orders JOIN customer ON o_custkey = c_custkey
-            GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    }
+            GROUP BY sh.doc_id ORDER BY sh.doc_id""", gated=False),
+        Query("top_ngrams", q_top_ngrams, """
+            WITH toks AS (
+                SELECT list_filter(string_split(text, ' '),
+                                   t -> t <> '') AS t
+                FROM documents),
+            g AS (
+                SELECT array_to_string(t[i.i:i.i + 1], ' ') AS ngram
+                FROM toks,
+                LATERAL unnest(generate_series(1, len(t) - 1)) AS i(i)
+                WHERE len(t) >= 2),
+            c AS (SELECT ngram, count(*)::BIGINT AS cnt
+                  FROM g GROUP BY ngram)
+            SELECT ngram, cnt,
+                   row_number() OVER (ORDER BY cnt DESC, ngram ASC)
+                       ::BIGINT AS rank
+            FROM c ORDER BY cnt DESC, ngram ASC LIMIT 20""", gated=False),
+    ]
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {q.name: q.build for q in _registry() if q.gated}
+
+
+def legacy_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {q.name: q.build for q in _registry() if not q.gated}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {q.name: q.oracle for q in _registry() if q.gated}
+
+
+def legacy_oracle_sql() -> dict[str, str]:
+    return {q.name: q.oracle for q in _registry() if not q.gated}

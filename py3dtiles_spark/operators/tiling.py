@@ -48,7 +48,7 @@ termination and the manifest).
 
 Counters (points in / nodes / modes / phase seconds per level) land in a
 manifest JSON per level; the written==read invariant of the reference
-(convert.py:652-653) is asserted on completion.
+(convert.py:652-653) is checked on completion (RuntimeError if broken).
 """
 
 from __future__ import annotations
@@ -745,15 +745,11 @@ def build_tiling(spark: SparkSession, points: DataFrame,
         # stale dirs from other runs can never leak in, no multi-root
         # partition discovery, and the pending halves of every level are
         # never even listed — the union reads exactly the finalized rows.
-        # Levels resumed from a pre-r4 FLAT checkpoint read the old way.
         parts = []
         for s in counters["levels"]:
-            out = os.path.join(ckpt, f"level={s['level']}", "out")
-            if _is_legacy_level_dir(out):
-                parts.append(spark.read.schema(KERNEL_SCHEMA).parquet(out)
-                             .filter("accepted")
-                             .select("point_id", "tile_id"))
-            elif os.path.isdir(p := os.path.join(out, "accepted=true")):
+            p = _level_half(os.path.join(ckpt, f"level={s['level']}", "out"),
+                            accepted=True)
+            if p is not None:
                 parts.append(spark.read.schema(PENDING_SCHEMA).parquet(p)
                              .select("point_id", "tile_id"))
         if parts:
@@ -769,43 +765,47 @@ def build_tiling(spark: SparkSession, points: DataFrame,
         # reference invariant: every point read is written (convert.py:652)
         assigned = assignments.count()
         counters["points_assigned"] = assigned
-        assert assigned == counters["points_total"], counters
+        if assigned != counters["points_total"]:
+            raise RuntimeError(
+                f"tiling wrote {assigned} assignments for "
+                f"{counters['points_total']} input points: {counters}")
     return TilingResult(assignments=assignments, root_aabb=root_aabb,
                         root_spacing=root_spacing, counters=counters,
                         checkpoint_dir=ckpt)
 
 
-def _is_legacy_level_dir(out_dir: str) -> bool:
-    """True when `out_dir` is a pre-r4 FLAT checkpoint (parquet files with
-    an `accepted` column, no hive accepted=*/ subdirs). Distinguishing it
-    from 'partitioned but fully-accepted' matters: treating a legacy dir
-    as 'no pending' would silently drop every prior level on resume."""
-    if (os.path.isdir(os.path.join(out_dir, "accepted=false"))
-            or os.path.isdir(os.path.join(out_dir, "accepted=true"))):
-        return False
-    return any(f.endswith(".parquet")
-               for f in os.listdir(out_dir)) if os.path.isdir(out_dir) else False
+def _level_half(out_dir: str, accepted: bool) -> Optional[str]:
+    """Path of one half of a level checkpoint, or None when that half is
+    empty. A level's out dir is hive-partitioned by `accepted` (the only
+    layout build_tiling writes), and every written level holds at least
+    one row, so an out dir with neither half is some other layout: it is
+    rejected rather than read as empty, which would drop its rows."""
+    done = os.path.join(out_dir, "accepted=true")
+    pending = os.path.join(out_dir, "accepted=false")
+    if not (os.path.isdir(done) or os.path.isdir(pending)):
+        raise ValueError(
+            f"level checkpoint {out_dir} has neither an accepted=true/ nor "
+            "an accepted=false/ subdir; expected the hive layout "
+            "out/accepted=true|false/*.parquet")
+    p = done if accepted else pending
+    return p if os.path.isdir(p) else None
 
 
 def _read_pending(spark, out_dir: str) -> DataFrame:
-    """Pending rows of a level checkpoint. Hive layout (r4+): target the
-    accepted=false subdir directly — the finalized rows are never listed,
-    let alone scanned; a level where everything finalized has no such dir
-    (empty frame; the loop's next count pass then completes). Legacy flat
-    layout (resuming a pre-r4 checkpoint): full read + filter."""
+    """Pending rows of a level checkpoint: the accepted=false subdir is
+    read directly, so the finalized rows are never listed, let alone
+    scanned; a level where everything finalized has no such dir (empty
+    frame; the loop's next count pass then completes)."""
     if not os.path.isdir(out_dir):
         # a fully-accepted level HAS an out dir (with only accepted=true);
         # a missing dir means the checkpoint was never written — resuming
         # with a wrong start_level must fail loudly, not return an empty
-        # pending that silently completes the build (ADVICE r4)
+        # pending that silently completes the build
         raise FileNotFoundError(
             f"level checkpoint {out_dir} does not exist — wrong "
             "start_level / checkpoint_dir?")
-    if _is_legacy_level_dir(out_dir):
-        return (spark.read.schema(KERNEL_SCHEMA).parquet(out_dir)
-                .filter("NOT accepted").drop("accepted"))
-    p = os.path.join(out_dir, "accepted=false")
-    if not os.path.isdir(p):
+    p = _level_half(out_dir, accepted=False)
+    if p is None:
         return spark.createDataFrame([], PENDING_SCHEMA)
     return spark.read.schema(PENDING_SCHEMA).parquet(p)
 

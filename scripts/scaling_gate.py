@@ -33,7 +33,6 @@ import os
 import statistics
 import subprocess
 import sys
-import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -103,16 +102,18 @@ print(json.dumps({"threads": th,
 
 
 def run_child(code: str, args: list[str]) -> dict:
-    with tempfile.NamedTemporaryFile("w", suffix=".py", delete=False) as f:
-        f.write(code.replace("@@REPO@@", REPO))
-        path = f.name
     env = dict(os.environ)
     env.setdefault("SPARK_GRAFT_PRETOUCH", "1")
-    out = subprocess.run([sys.executable, path] + args,
+    out = subprocess.run([sys.executable, "-c",
+                          code.replace("@@REPO@@", REPO)] + args,
                          capture_output=True, text=True, timeout=3000,
                          env=env, cwd=REPO)
-    line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-    return json.loads(line)
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
+    if not lines:
+        tail = "\n".join(out.stderr.splitlines()[-20:])
+        raise RuntimeError(f"child {args} exited {out.returncode} without "
+                           f"a JSON line; stderr tail:\n{tail}")
+    return json.loads(lines[-1])
 
 
 def main():

@@ -1,7 +1,12 @@
 """End-to-end flagship pipeline: pages -> geocode -> tiling -> tileset,
 with the per-row byte-identical-text invariant (BASELINE.json input_hint)."""
 
+import os
+import sys
+
 import pytest
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from py3dtiles_spark.operators.tiling import TilingConfig
 from py3dtiles_spark.plans.pipeline import tile_pages, verify_text_invariant
@@ -208,30 +213,46 @@ def test_zorder_layout_prunes_files(spark, tmp_path):
 
 
 def test_read_pending_legacy_flat_checkpoint(spark, tmp_path):
-    """Resuming a pre-r4 FLAT level checkpoint (parquet files with an
-    `accepted` column, no hive subdirs) must read pending rows the old
-    way, not silently return empty — and the hive layout must still
-    target the accepted=false subdir."""
-    from py3dtiles_spark.operators.tiling import (
-        _is_legacy_level_dir, _read_pending)
+    """Level checkpoints are hive-partitioned by `accepted`: pending reads
+    target the accepted=false subdir, a fully-accepted level reads as
+    empty, and a flat dir (parquet files with an `accepted` column, no
+    accepted=*/ subdirs) is rejected instead of read as empty."""
+    from py3dtiles_spark.operators.tiling import _read_pending
     rows = [(i, float(i), 0.0, 0.0, "0", i % 2 == 0) for i in range(20)]
     df = spark.createDataFrame(
         rows, "point_id long, x float, y float, z float, "
               "tile_id string, accepted boolean")
-    legacy = str(tmp_path / "legacy_out")
-    df.write.parquet(legacy)
-    assert _is_legacy_level_dir(legacy)
-    pend = _read_pending(spark, legacy)
-    assert pend.count() == 10
-    assert "accepted" not in pend.columns
     hive = str(tmp_path / "hive_out")
     df.write.partitionBy("accepted").parquet(hive)
-    assert not _is_legacy_level_dir(hive)
-    assert _read_pending(spark, hive).count() == 10
+    pend = _read_pending(spark, hive)
+    assert pend.count() == 10
+    assert "accepted" not in pend.columns
     # fully-accepted hive level: no accepted=false dir -> empty, no error
     alldone = str(tmp_path / "done_out")
     df.filter("accepted").write.partitionBy("accepted").parquet(alldone)
     assert _read_pending(spark, alldone).count() == 0
+    flat = str(tmp_path / "flat_out")
+    df.write.parquet(flat)
+    with pytest.raises(ValueError, match="accepted=true"):
+        _read_pending(spark, flat)
+
+
+def test_par_accepts_size_string(spark, tmp_path):
+    """_par reads spark.sql.files.maxPartitionBytes through Spark's own
+    byte-string parsing, so a legal '128m' setting works."""
+    from __spark_entry__ import _par
+    path = str(tmp_path / "one_file")
+    spark.range(100).coalesce(1).write.parquet(path)
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "128m")
+    try:
+        out = _par(spark.read.parquet(path))
+    finally:
+        spark.conf.set(key, prev)
+    assert out.count() == 100
+    assert (out.rdd.getNumPartitions()
+            == spark.sparkContext.defaultParallelism)
 
 
 def test_salted_join_rejects_outer(spark):
