@@ -31,8 +31,9 @@ BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "300000"))
 
 
 def _sentinel(threads: int = 8, mb_per_thread: int = 16) -> float:
-    """Host-health probe: fresh-page memset throughput in GB/s (trimmed
-    scripts/fault_bench.py). This VM's kernel serializes first-touch page
+    """Host-health probe: fresh-page memset throughput in GB/s (the same
+    probe scripts/scaling_gate.py records per thread count as its
+    alloc_ceiling). This VM's kernel serializes first-touch page
     faults (~65 us each) in episodes that inflate ANY alloc-heavy Spark
     stage 2-20x; timing the probe right before each query makes those
     episodes visible IN the bench output instead of being argued about
@@ -85,8 +86,7 @@ def main() -> None:
     # state a long-lived executor delivers, not JVM cold-start
     warm_pts = pages_as_points(generate_pages(spark, 30_000), skew=True)
     warm_ckpt = tempfile.mkdtemp()
-    build_tiling(spark, warm_pts,
-                 TilingConfig(checkpoint_dir=warm_ckpt, checkpoint="memory"))
+    build_tiling(spark, warm_pts, TilingConfig(checkpoint_dir=warm_ckpt))
     spark.catalog.clearCache()
     shutil.rmtree(warm_ckpt, ignore_errors=True)
 
@@ -100,22 +100,7 @@ def main() -> None:
     assert res.counters["points_assigned"] == BENCH_DOCS, res.counters
     timings["flagship_tiling"] = round(time.time() - t0, 3)
     extra["docs_per_sec"] = round(BENCH_DOCS / timings["flagship_tiling"], 1)
-
-    # same job on the in-memory checkpoint path (production local mode;
-    # the headline number above keeps the durable parquet-checkpoint
-    # methodology of r1/r2 for round-over-round comparability)
-    mem_ckpt = tempfile.mkdtemp()
-    t0 = time.time()
-    res_m = build_tiling(spark, points,
-                         TilingConfig(checkpoint_dir=mem_ckpt,
-                                      checkpoint="memory",
-                                      in_kernel_threshold=40_000))
-    assert res_m.counters["points_assigned"] == BENCH_DOCS
-    extra["flagship_memory_sec"] = round(time.time() - t0, 3)
-    extra["docs_per_sec_memory"] = round(
-        BENCH_DOCS / extra["flagship_memory_sec"], 1)
     spark.catalog.clearCache()
-    shutil.rmtree(mem_ckpt, ignore_errors=True)
 
     sentinel["tileset_emit"] = _sentinel()
     t0 = time.time()

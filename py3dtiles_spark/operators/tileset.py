@@ -361,22 +361,3 @@ def root_overview(points_with_tiles: DataFrame, root_aabb, root_spacing,
     return (depth1.withColumn("_ck", key)
             .groupBy("_ck").applyInPandas(accept_cell, schema=schema))
 
-
-def tileset_from_tiling(points_with_tiles: DataFrame, root_aabb, root_spacing,
-                        scale: float = 1.0, rollup: bool = True,
-                        distributed: bool = True):
-    """Convenience: assignments+xyz -> (tiles_df_after_rollup, tileset docs).
-
-    distributed=True (default) assembles subtree JSON executor-side —
-    identical bytes, and the driver never holds the tiles table."""
-    assignments = points_with_tiles
-    if rollup:
-        assignments = rollup_small_children(assignments)
-    tiles = build_tiles_df(assignments)
-    if distributed:
-        docs = build_tileset_json_distributed(tiles, root_aabb,
-                                              root_spacing, scale)
-    else:
-        docs = build_tileset_json(tiles.collect(), root_aabb, root_spacing,
-                                  scale)
-    return tiles, docs

@@ -5,35 +5,41 @@ master/worker loop). The reference shuffles point batches between processes
 over ZMQ keyed by node name; here each "ZMQ hop" is one Spark shuffle and the
 build is a level-synchronous iteration (SURVEY.md §3.1 "Spark shape").
 
-Per level, exactly TWO jobs:
+Per level, two phases:
 
   1. routing: groupBy(tile_id).agg(count, bbox) — one row per live node,
-     fetched through a BOUNDED limit probe (r5): levels under
+     fetched through a BOUNDED limit probe: levels under
      node_broadcast_rows route driver-side over O(cap) rows (pure-JVM
      probe job, LocalRelation broadcast — the fast common case); over-cap
      levels run the SAME rule as a distributed DataFrame plan
      (_node_meta_df: native when() + an Arrow kernel for big-node rows)
      and the driver sees just the <=4-row per-mode histogram. Modes:
-       leaf   count < 20000 or spacing floor  -> accept all (node.py:70-73)
-       local  count <= in_kernel_threshold    -> one task recurses the WHOLE
-              subtree (the reference's depth-limited pipelining,
-              node_process.py:82-90, taken to its limit: zero further
-              shuffles for that subtree)
-       cell   huge node -> fan out by LOD-grid cell: the acceptance test is
-              per-cell independent (points_grid.py:22-31 scans only the
-              same cell), so a hot node runs as 27+ parallel tasks instead
-              of serializing on one worker — the skew answer for megacity
-              cells at 10^12 docs.
+       leaf    count < 20000 or spacing floor  -> accept all (node.py:70-73)
+       local   count <= local cutoff           -> one task recurses the
+               WHOLE subtree (the reference's depth-limited pipelining,
+               node_process.py:82-90, taken to its limit: zero further
+               shuffles for that subtree)
+       express big node whose bbox sits in ONE child octant (a megacity
+               cluster) -> one task accepts AND descends level after level
+               until the points spread over more than one child
+       cell    huge node -> fan out by LOD-grid cell: the acceptance test
+               is per-cell independent (points_grid.py:22-31 scans only the
+               same cell), so a hot node runs as 27+ parallel tasks instead
+               of serializing on one worker — the skew answer for megacity
+               cells at 10^12 docs.
      and, for cell nodes, derives the float32 grid constants from the tile
      name (stateless, points/utils.py:83-88).
 
-  2. kernel: ONE shuffle on (tile_id, group_key) — group_key is the grid
-     cell for 'cell' nodes (computed NATIVELY in float32 column arithmetic,
-     bit-identical to the numpy kernel; no Python pre-pass) and 0 otherwise
-     — into ONE applyInPandas kernel handling all three modes, written ONCE
-     to parquet. That parquet is the per-level checkpoint: resumable,
-     lineage-truncating; accepted rows and next-level forwards are both
-     filters over it (no extra writes).
+  2. kernel + checkpoint write, one job: ONE shuffle on (tile_id,
+     group_key) — group_key is the grid cell for 'cell' nodes (computed
+     NATIVELY in float32 column arithmetic, bit-identical to the numpy
+     kernel; no Python pre-pass) and 0 otherwise — into ONE applyInPandas
+     kernel for the three non-leaf modes (leaf rows bypass it as a JVM
+     filter), written ONCE to parquet under
+     level=N/out/accepted=true|false/ with a level=N/_MANIFEST.json. That
+     parquet is the per-level checkpoint: resumable and
+     lineage-truncating; the next level reads the accepted=false half,
+     the final assignments read every accepted=true half.
 
 Points are carried NARROW through the loop (point_id + xyz float32 only);
 payload columns (url, html, text...) are joined back once at the end — at
@@ -102,36 +108,25 @@ class TilingConfig:
     # instead of paying shuffle+Arrow plumbing for every remaining level.
     # The effective local cutoff is
     #   max(in_kernel_threshold,
-    #       min(local_hard_cap, level_points / (local_parallelism_factor *
-    #                                           defaultParallelism)))
-    # factor 1 (one local task's rows ~= one core's fair share) measured
-    # strictly better than 2 at 1.6M docs/skew: level count 5 -> 2 (megacity
-    # nodes resolve their whole chain in-task via express descent instead of
-    # shuffling every level) and 8-core wall time -23%. The hard cap bounds
-    # any single local task (a megacity node as one task = a multi-second
-    # straggler that caps scaling); nodes above it fan out per cell.
+    #       min(local_hard_cap, level_points / parallelism))
+    # i.e. one local task's rows ~= one core's fair share, which measured
+    # strictly better than half a share at 1.6M docs/skew: level count
+    # 5 -> 2 (megacity nodes resolve their whole chain in-task via express
+    # descent instead of shuffling every level) and 8-core wall time -23%.
+    # The hard cap bounds any single local task (a megacity node as one
+    # task = a multi-second straggler that caps scaling); nodes above it
+    # fan out per cell.
     local_hard_cap: int = 300_000
-    local_parallelism_factor: int = 1
     # parallelism used for the local-cutoff rule. None = the session's
     # defaultParallelism; set a fixed value to make the level plan
     # independent of the core count (identical plans across cluster sizes,
     # required for apples-to-apples scaling measurements)
     plan_parallelism: Optional[int] = None
     max_levels: int = 32
+    # every level lands here as parquet (resumable, lineage-truncating: at
+    # cluster scale the level snapshot IS the recovery unit and feeds the
+    # final assignment read). None = a fresh temp dir.
     checkpoint_dir: Optional[str] = None
-    # "parquet": every level lands on storage (resumable, lineage-truncating
-    #   — the 100 TB default: at cluster scale the level snapshot IS the
-    #   recovery unit and feeds the final assignment read).
-    # "memory": per-level persist(MEMORY_AND_DISK) instead of parquet —
-    #   the classic Spark iterative-algorithm shape; no per-level file
-    #   round-trip (2x less I/O + page churn per level), but not resumable
-    #   across driver restarts. Right choice for ephemeral/benchmark runs.
-    checkpoint: str = "parquet"
-    # optional approximation for extreme scale: only the first N canonical
-    # points per (node, cell) run the sequential accept loop; the rest are
-    # forwarded as rejected. None = exact reference semantics.
-    grid_sample_cap: Optional[int] = None
-    cell_count: int = GRID_INITIAL_CELL_COUNT
     # levels whose routed node list fits in this many rows ride to the
     # executors as a LocalRelation broadcast (no extra job, no broadcast
     # exchange — the sandbox/common case); bigger levels NEVER reach the
@@ -169,9 +164,8 @@ def compute_root_aabb(points: DataFrame):
 
 
 def _unified_kernel(cfg: TilingConfig, root_aabb, root_spacing):
-    """One grouped-map kernel for all three node modes. The group is
+    """One grouped-map kernel for every node mode. The group is
     (tile_id, group_key); `mode` rides as a column (constant per group)."""
-    cap = cfg.grid_sample_cap
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         mode = pdf["mode"].iat[0]
@@ -257,12 +251,7 @@ def _unified_kernel(cfg: TilingConfig, root_aabb, root_spacing):
         pdf = base.sort_values("point_id", kind="stable").reset_index(drop=True)
         frame = node_frame(tile_id, root_aabb, root_spacing)
         xyz = pdf[["x", "y", "z"]].to_numpy(dtype=np.float32)
-        sq = frame.spacing * frame.spacing
-        if cap is not None and len(pdf) > cap:
-            accept = np.zeros(len(pdf), dtype=bool)
-            accept[:cap] = sequential_accept(xyz[:cap], sq)
-        else:
-            accept = sequential_accept(xyz, sq)
+        accept = sequential_accept(xyz, frame.spacing * frame.spacing)
         out = pdf.copy()
         out["accepted"] = accept
         rej = ~accept
@@ -281,7 +270,7 @@ def _node_meta_rows(counts_rows, cfg: TilingConfig, root_aabb, root_spacing,
     for cell nodes (aabb_min float32, scale = cell_count * inv_aabb_size
     float64 — the reference kernel's exact promotion). Pure-JVM probe job
     + O(cap) python beats the distributed plan's extra Arrow-UDF job by
-    ~35% flagship wall at sandbox scale (r5 A/B); _node_meta_df is the
+    ~35% flagship wall at sandbox scale (measured A/B); _node_meta_df is the
     SAME rule as a DataFrame plan for over-cap levels. Keep the two in
     lockstep (the over-cap golden test pins their agreement)."""
     spacing_floor = MIN_SPACING * cfg.scale
@@ -309,7 +298,7 @@ def _node_meta_rows(counts_rows, cfg: TilingConfig, root_aabb, root_spacing,
         else:
             frame = node_frame(tid, root_aabb, root_spacing)
             inv = np.float32(1.0) / frame.size          # f32 (node.py:30)
-            scale = (np.array([cfg.cell_count] * 3, dtype=np.int32)
+            scale = (np.array([GRID_INITIAL_CELL_COUNT] * 3, dtype=np.int32)
                      * inv)                             # int32*f32 -> f64
             rows.append((tid, "cell",
                          float(frame.aabb[0][0]), float(frame.aabb[0][1]),
@@ -325,7 +314,6 @@ def _node_geom_udf(cfg: TilingConfig, root_aabb, root_spacing):
     (aabb_min float32, scale = cell_count * inv_aabb_size float64 — the
     reference kernel's exact promotion, node.py:30 / distance.py:24-27).
     Node-count sized, never point-count sized."""
-    cell_count = cfg.cell_count
     ra = np.asarray(root_aabb, dtype=np.float64)
     rs = float(root_spacing)
 
@@ -353,7 +341,7 @@ def _node_geom_udf(cfg: TilingConfig, root_aabb, root_spacing):
                 out["express"][i] = True
                 continue
             inv = np.float32(1.0) / frame.size          # f32 (node.py:30)
-            scale = (np.array([cell_count] * 3, dtype=np.int32)
+            scale = (np.array([GRID_INITIAL_CELL_COUNT] * 3, dtype=np.int32)
                      * inv)                             # int32*f32 -> f64
             out["mnx"][i], out["mny"][i], out["mnz"][i] = frame.aabb[0]
             out["sx"][i], out["sy"][i], out["sz"][i] = scale
@@ -376,18 +364,17 @@ def _local_cutoff(cfg: TilingConfig, est_total: Optional[int],
     cutoff, so plans are bit-identical to the exact-total rule there."""
     if est_total is None:
         return cfg.in_kernel_threshold
-    den = max(1, cfg.local_parallelism_factor * parallelism)
     return max(cfg.in_kernel_threshold,
-               min(cfg.local_hard_cap, est_total // den))
+               min(cfg.local_hard_cap, est_total // max(1, parallelism)))
 
 
 def _node_meta_df(counts: DataFrame, cfg: TilingConfig, root_aabb,
                   root_spacing, local_cutoff: int) -> DataFrame:
     """Distributed node routing: per live node -> mode (+ grid constants
-    for cell nodes). The r1-r4 engine collected the per-level node list to
-    the driver and rebuilt it row-by-row — fine at sandbox scale but the
-    reference master's State dict reborn: at 10^12 points a level can hold
-    ~5x10^7 live nodes. Here the routing is a DataFrame plan over the
+    for cell nodes). Collecting every level's node list to the driver and
+    rebuilding it row-by-row is fine at sandbox scale but the reference
+    master's State dict reborn: at 10^12 points a level can hold ~5x10^7
+    live nodes. Here the routing is a DataFrame plan over the
     (tile_id, cnt, bbox) aggregate:
 
       leaf / local / cell         native when() over cnt + name-derived
@@ -398,7 +385,7 @@ def _node_meta_df(counts: DataFrame, cfg: TilingConfig, root_aabb,
     build_tiling fetches the result through a BOUNDED limit probe
     (node_broadcast_rows); an over-cap level never reaches the driver.
 
-    Mode rule (identical to r4, reference node.py:70-73 +
+    Mode rule (the same as _node_meta_rows; reference node.py:70-73 +
     node_process.py:82-90 generalized):
       leaf     cnt < split_threshold or spacing <= floor -> accept all
       express  big node whose bbox sits in ONE child octant
@@ -450,7 +437,7 @@ def _root_route_expr(root_aabb, root_spacing):
     return digit.cast("string")
 
 
-def _native_cell_key(cfg: TilingConfig):
+def _native_cell_key():
     """group_key as a native column expression mirroring the reference
     xyz_to_key promotion exactly (distance.py:24-32): the DOUBLE scale
     column (int32 cell_count * float32 inv -> f64) times the FLOAT
@@ -458,7 +445,7 @@ def _native_cell_key(cfg: TilingConfig):
     long and clamped, packed y<<s | z<<2s. Keeping the product in f64
     matches the numpy/numba kernel bit-for-bit on boundary points where a
     float32 product would round 0.99999997 up to 1.0."""
-    c = cfg.cell_count
+    c = GRID_INITIAL_CELL_COUNT
     shift = int(c - 1).bit_length()
 
     def axis(col, mn, sc):
@@ -481,9 +468,6 @@ def build_tiling(spark: SparkSession, points: DataFrame,
     are dropped (join payload back on point_id afterwards).
     """
     cfg = cfg or TilingConfig()
-    memory_mode = cfg.checkpoint == "memory"
-    if memory_mode and resume:
-        raise ValueError("resume=True requires checkpoint='parquet'")
     ckpt = cfg.checkpoint_dir or tempfile.mkdtemp(prefix="tiling_ckpt_")
     os.makedirs(ckpt, exist_ok=True)
 
@@ -496,8 +480,8 @@ def build_tiling(spark: SparkSession, points: DataFrame,
     meta_path = os.path.join(ckpt, "meta.json")
     start_level = 0
     counters: dict = {"levels": []}
-    input_cached = None
-    if resume and os.path.exists(meta_path):
+    resuming = resume and os.path.exists(meta_path)
+    if resuming:
         with open(meta_path) as f:
             meta = json.load(f)
         root_aabb = np.array(meta["root_aabb"], dtype=np.float64)
@@ -516,14 +500,16 @@ def build_tiling(spark: SparkSession, points: DataFrame,
         for d in os.listdir(ckpt):
             if d.startswith("level="):
                 shutil.rmtree(os.path.join(ckpt, d), ignore_errors=True)
-        # r7: persist the narrow input BEFORE the AABB pass — level 0
-        # consumes the upstream lineage three times (AABB agg, per-node
-        # counts, kernel pass); caching the 21 B/point narrow rows turns
-        # three source-scan/generation executions into one. Unpersisted
-        # before return.
+    input_cached = None
+    if start_level == 0:
+        # persist the narrow input BEFORE the AABB pass — level 0 consumes
+        # the upstream lineage three times (AABB agg, per-node counts,
+        # kernel pass); caching the 21 B/point narrow rows turns three
+        # source-scan/generation executions into one. Released as soon as
+        # level 0's checkpoint is on disk: every later level reads parquet.
         from pyspark import StorageLevel
-        narrow = narrow.persist(StorageLevel.MEMORY_AND_DISK)
-        input_cached = narrow
+        input_cached = narrow = narrow.persist(StorageLevel.MEMORY_AND_DISK)
+    if not resuming:
         if cfg.root_aabb is not None:
             root_aabb = np.asarray(cfg.root_aabb, dtype=np.float64)
             root_spacing = (float(cfg.root_spacing)
@@ -545,12 +531,6 @@ def build_tiling(spark: SparkSession, points: DataFrame,
         # zero Python for the full-volume level — the cheapest possible
         # level 0 at 100 TB. The route expression re-evaluates per
         # consumer pass (cheap float compares), the cached input does not.
-        if input_cached is None:
-            # resume=True with meta.json present but no completed level:
-            # the fresh-run persist above was skipped — do it here
-            from pyspark import StorageLevel
-            narrow = narrow.persist(StorageLevel.MEMORY_AND_DISK)
-            input_cached = narrow
         pending = narrow.withColumn("tile_id", _root_route_expr(root_aabb,
                                                                 root_spacing))
     else:
@@ -558,7 +538,7 @@ def build_tiling(spark: SparkSession, points: DataFrame,
             spark, os.path.join(ckpt, f"level={start_level - 1}", "out"))
 
     kernel = _unified_kernel(cfg, root_aabb, root_spacing)
-    group_key = _native_cell_key(cfg)
+    group_key = _native_cell_key()
     # level-total estimate for the local cutoff: the previous level's
     # points_in (this level's input is a subset of it); on resume, the
     # last completed manifest. None (level 0 of a fresh run) -> the
@@ -566,7 +546,6 @@ def build_tiling(spark: SparkSession, points: DataFrame,
     est_total = (counters["levels"][-1]["points_in"]
                  if counters["levels"] else None)
     complete = False
-    level_dfs: list[DataFrame] = []   # memory mode: persisted level outputs
 
     # kernel groups are CPU-heavy but byte-tiny (narrow rows): AQE's
     # byte-based partition coalescing would serialize them onto a few
@@ -602,13 +581,13 @@ def build_tiling(spark: SparkSession, points: DataFrame,
             # BOUNDED probe: a level with <= node_broadcast_rows live nodes
             # (every sandbox level; most real levels) comes back whole from
             # the ONE pure-JVM routing job — modes computed driver-side over
-            # the O(cap) rows (exact level_total, r4-identical plans), node
-            # list re-shipped as a LocalRelation broadcast (no broadcast-
-            # exchange job, no Arrow stage). Over-cap levels never reach the
-            # driver: _node_meta_df runs the SAME rule as a distributed plan,
-            # only the per-mode histogram is collected, and node_meta joins
-            # to pending by shuffle (a GB-sized node list has no business
-            # being broadcast anyway).
+            # the O(cap) rows (with the exact level total for the local
+            # cutoff), node list re-shipped as a LocalRelation broadcast (no
+            # broadcast-exchange job, no Arrow stage). Over-cap levels never
+            # reach the driver: _node_meta_df runs the SAME rule as a
+            # distributed plan, only the per-mode histogram is collected, and
+            # node_meta joins to pending by shuffle (a GB-sized node list has
+            # no business being broadcast anyway).
             cap = int(cfg.node_broadcast_rows)
             node_meta_full = None
             # persisted so the over-cap path's _node_meta_df
@@ -674,52 +653,45 @@ def build_tiling(spark: SparkSession, points: DataFrame,
                            .groupBy("tile_id", "gk")
                            .applyInPandas(kernel, schema=KERNEL_SCHEMA))
                 out_df = nonleaf.unionByName(leaf_rows)
-            if memory_mode:
-                from pyspark import StorageLevel
-                out_df = out_df.persist(StorageLevel.MEMORY_AND_DISK)
-                out_df.count()   # materialize the level
-                level_dfs.append(out_df)
-            else:
-                # hive-partition by `accepted`: ONE write, but the next
-                # level's NOT-accepted read partition-prunes the finalized
-                # rows away entirely and the final assignments union reads
-                # only accepted=true dirs — at deep levels (mostly-leaf
-                # output) this halves checkpoint read volume, which on a
-                # fault-bound host is wall-clock.
-                # r7 (guide §6): decouple kernel parallelism from output
-                # file count — the kernel fans out at shuffle width, but
-                # its output is n_in narrow rows (~40 B each); letting
-                # every kernel/leaf task open its own dynamic-partition
-                # writers produced ~200 KB-sized files per level and paid
-                # seconds of open/commit overhead. Repartition to a
-                # size-derived file count (128 MB target) first: locally
-                # 1-2 write tasks, petabyte levels thousands — never a
-                # constant tuned to either.
-                target_files = max(1, -(-n_in * 40 // (128 << 20)))
-                (out_df.repartition(target_files)
-                 .write.mode("overwrite").partitionBy("accepted")
-                 .parquet(os.path.join(lv_dir, "out")))
+            # hive-partition by `accepted`: ONE write, but the next level's
+            # NOT-accepted read partition-prunes the finalized rows away
+            # entirely and the final assignments union reads only
+            # accepted=true dirs — at deep levels (mostly-leaf output) this
+            # halves checkpoint read volume, which on a fault-bound host is
+            # wall-clock.
+            # Kernel parallelism is decoupled from output file count: the
+            # kernel fans out at shuffle width, but its output is n_in
+            # narrow rows (~40 B each); letting every kernel/leaf task open
+            # its own dynamic-partition writers produced ~200 KB-sized files
+            # per level and paid seconds of open/commit overhead.
+            # Repartition to a size-derived file count (128 MB target)
+            # first: locally 1-2 write tasks, petabyte levels thousands —
+            # never a constant tuned to either.
+            target_files = max(1, -(-n_in * 40 // (128 << 20)))
+            (out_df.repartition(target_files)
+             .write.mode("overwrite").partitionBy("accepted")
+             .parquet(os.path.join(lv_dir, "out")))
             t_kernel = time.time() - t0
             if node_meta_full is not None:
                 node_meta_full.unpersist()
+            if input_cached is not None:
+                # level 0 is on disk and every later level reads parquet
+                input_cached.unpersist()
+                input_cached = None
 
             lv_stats = {"level": level, "points_in": n_in,
                         "nodes": n_nodes, "modes": modes,
                         "sec_counts": round(t_counts, 3),
                         "sec_kernel": round(t_kernel, 3)}
-            if not memory_mode:
-                with open(os.path.join(lv_dir, "_MANIFEST.json"), "w") as f:
-                    json.dump(lv_stats, f)
+            with open(os.path.join(lv_dir, "_MANIFEST.json"), "w") as f:
+                json.dump(lv_stats, f)
             counters["levels"].append(lv_stats)
 
             if modes.get("cell", 0) == 0 and modes.get("express", 0) == 0:
                 # leaf/local groups fully resolve their points — nothing forwards
                 complete = True
                 break
-            if memory_mode:
-                pending = out_df.filter("NOT accepted").drop("accepted")
-            else:
-                pending = _read_pending(spark, os.path.join(lv_dir, "out"))
+            pending = _read_pending(spark, os.path.join(lv_dir, "out"))
 
     finally:
         spark.conf.set(_coalesce_key, _coalesce_prev)
@@ -727,36 +699,25 @@ def build_tiling(spark: SparkSession, points: DataFrame,
             spark.conf.unset(_limit_key)
         else:
             spark.conf.set(_limit_key, _limit_prev)
-    if input_cached is not None:
-        input_cached.unpersist()
-    if memory_mode:
-        assignments = spark.createDataFrame([], ASSIGN_SCHEMA)
-        if level_dfs:
-            from functools import reduce
-            # filter+project each cached level BEFORE the union: unioning
-            # the raw persisted frames defeats Spark's cache lookup for one
-            # branch (the level's Python kernel silently re-executes);
-            # narrowing per-branch keeps every InMemoryTableScan
-            assignments = reduce(DataFrame.unionByName, [
-                df.filter("accepted").select("point_id", "tile_id")
-                for df in level_dfs])
+        if input_cached is not None:
+            # the loop ended before level 0's checkpoint was written
+            input_cached.unpersist()
+    # explicit per-level accepted=true subdirs (not a level=* glob): stale
+    # dirs from other runs can never leak in, no multi-root partition
+    # discovery, and the pending halves of every level are never even
+    # listed — the union reads exactly the finalized rows.
+    parts = []
+    for s in counters["levels"]:
+        p = _level_half(os.path.join(ckpt, f"level={s['level']}", "out"),
+                        accepted=True)
+        if p is not None:
+            parts.append(spark.read.schema(PENDING_SCHEMA).parquet(p)
+                         .select("point_id", "tile_id"))
+    if parts:
+        from functools import reduce
+        assignments = reduce(DataFrame.unionByName, parts)
     else:
-        # explicit per-level accepted=true subdirs (not a level=* glob):
-        # stale dirs from other runs can never leak in, no multi-root
-        # partition discovery, and the pending halves of every level are
-        # never even listed — the union reads exactly the finalized rows.
-        parts = []
-        for s in counters["levels"]:
-            p = _level_half(os.path.join(ckpt, f"level={s['level']}", "out"),
-                            accepted=True)
-            if p is not None:
-                parts.append(spark.read.schema(PENDING_SCHEMA).parquet(p)
-                             .select("point_id", "tile_id"))
-        if parts:
-            from functools import reduce
-            assignments = reduce(DataFrame.unionByName, parts)
-        else:
-            assignments = spark.createDataFrame([], ASSIGN_SCHEMA)
+        assignments = spark.createDataFrame([], ASSIGN_SCHEMA)
 
     counters["points_total"] = (counters["levels"][0]["points_in"]
                                 if counters["levels"] else 0)

@@ -1,10 +1,11 @@
 """Sentinel-GATED scaling-efficiency protocol (VERDICT r6 next-round #1).
 
 The r6 series showed the raw N->4N ratio is dominated by this VM's
-serialized page-fault ceiling (~200k docs/s aggregate, fault_bench.py):
-clean high-core legs sit ON the ceiling, so the ratio is mechanically
-capped and degraded low-core legs fake passes. This harness makes the
-evidence protocol explicit instead of arguing about it per-round:
+serialized page-fault ceiling (~200k docs/s aggregate; see the
+alloc_ceiling this script records): clean high-core legs sit ON the
+ceiling, so the ratio is mechanically capped and degraded low-core legs
+fake passes. This harness makes the evidence protocol explicit instead
+of arguing about it per-round:
 
 1. Every timed run carries a fresh-page sentinel (bench._sentinel); a leg
    is CLEAN only if the median-contributing runs all have sentinel >=
@@ -13,17 +14,23 @@ evidence protocol explicit instead of arguing about it per-round:
    it has RUNS clean samples or MAX_ATTEMPTS is hit.
 2. Both legs of a pair must be clean for the pair to count; attempts are
    reported either way.
-3. A host-ceiling decomposition rides along: fault_bench-style aggregate
-   alloc throughput at each leg's thread count, so a 4N leg whose
-   docs/s sits at the measured ceiling is attributable to the host, not
-   the engine (engine-side criteria: identical plans via
+3. A host-ceiling decomposition rides along: aggregate fresh-page
+   alloc throughput (bench._sentinel) at each thread count, so a 4N leg
+   whose docs/s sits at the measured ceiling is attributable to the
+   host, not the engine (engine-side criteria: identical plans via
    plan_parallelism pin, per-core throughput at N known from the clean
    N leg).
+4. A pure-JVM control runs the same lo/hi legs: geocode -> S2 quad
+   encode -> groupBy count over NATIVE_ROWS spark.range rows, the native
+   expressions of the s2_cells query with no Python worker in the loop.
+   If it scales while the tiler plateaus, the plateau is the host's
+   page-fault tax on Python worker allocation, not the plan shape.
 
 Usage: python scripts/scaling_gate.py [n_docs] [lo] [hi] [runs]
 Prints one JSON with both legs' clean/dirty samples, efficiency over
-clean medians, and the alloc-ceiling curve. Exit code 0 always (this is
-evidence collection, not a hard gate).
+clean medians, the alloc-ceiling curve and the "native" control with its
+own scaling_efficiency. Exit code 0 always (this is evidence collection,
+not a hard gate).
 """
 
 from __future__ import annotations
@@ -38,12 +45,14 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 GATE_GBPS = 4.0          # healthy-window bar (bench.py sentinel doc)
 MAX_ATTEMPTS = 12
+NATIVE_ROWS = 20_000_000
 
 CHILD = r"""
-import json, os, sys, tempfile, time
+import json, sys, time
 sys.path.insert(0, "@@REPO@@")
 from py3dtiles_spark.session import get_spark
-from py3dtiles_spark.operators.tiling import TilingConfig, build_tiling
+from py3dtiles_spark.operators.tiling import (
+    TilingConfig, build_tiling, cleanup_checkpoint)
 from py3dtiles_spark.sources.pages import generate_pages, pages_as_points
 from bench import _sentinel
 
@@ -54,27 +63,12 @@ spark = get_spark("scaling-gate", cpus=cpus, shuffle_partitions=2 * cpus)
 points = pages_as_points(generate_pages(spark, n_docs), skew=True)
 
 def one_run():
-    # SPARK_GRAFT_LOCAL_HARD_CAP bounds the largest sequential accept
-    # task (default 300k); the SAME value applies to BOTH legs, so the
-    # plans stay identical — it tunes task granularity, not the plan
-    # SPARK_GRAFT_GRID_SAMPLE_CAP bounds the per-(node,cell) sequential
-    # accept loop (TilingConfig.grid_sample_cap — the engine's documented
-    # extreme-scale approximation). Bounding it makes the run a
-    # CPU-bound variant whose largest sequential unit is constant in
-    # data size, isolating ENGINE scaling from the benchmark geometry's
-    # linearly-growing hot-cell term; default None = exact reference
-    # semantics. Applied identically to both legs either way.
-    _cap = os.environ.get("SPARK_GRAFT_GRID_SAMPLE_CAP")
-    cfg = TilingConfig(checkpoint_dir=tempfile.mkdtemp(),
-                       plan_parallelism=8, checkpoint="memory",
-                       grid_sample_cap=int(_cap) if _cap else None,
-                       local_hard_cap=int(os.environ.get(
-                           "SPARK_GRAFT_LOCAL_HARD_CAP", "300000")))
+    # plan_parallelism pins the level plan, so both legs run the same one
     t0 = time.time()
-    res = build_tiling(spark, points, cfg)
+    res = build_tiling(spark, points, TilingConfig(plan_parallelism=8))
     dt = time.time() - t0
     assert res.counters["points_assigned"] == n_docs
-    spark.catalog.clearCache()
+    cleanup_checkpoint(res)
     return dt
 
 one_run()                                   # warm (codegen, pools, heap)
@@ -88,6 +82,38 @@ while len(clean) < runs and att < max_att:
         {"sec": round(t, 3), "sentinel_gbps": s})
 print(json.dumps({"cpus": cpus, "clean": clean, "dirty": dirty,
                   "attempts": att}))
+spark.stop()
+"""
+
+NATIVE = r"""
+import json, sys, time
+sys.path.insert(0, "@@REPO@@")
+from pyspark.sql import functions as F
+from py3dtiles_spark.functions.s2 import s2_quad_id_expr
+from py3dtiles_spark.session import get_spark
+
+cpus, n, runs = int(sys.argv[1]), int(sys.argv[2]), int(sys.argv[3])
+spark = get_spark("native-scaling", cpus=cpus, shuffle_partitions=2 * cpus)
+U32 = 4294967296
+
+def job():
+    df = spark.range(0, n, 1, max(cpus * 4, 8))
+    i = F.col("id")
+    g = df.select(
+        (F.lit(-180.0) + (F.pmod(i * 2654435761, F.lit(U32)) / F.lit(U32)) * 360.0).alias("x"),
+        (F.lit(-85.0) + (F.pmod(i * 2246822519, F.lit(U32)) / F.lit(U32)) * 170.0).alias("y"))
+    t0 = time.time()
+    out = (g.select(s2_quad_id_expr(8).alias("c"))
+           .groupBy("c").agg(F.count(F.lit(1)).alias("n"))
+           .agg(F.count(F.lit(1)), F.sum("n")).collect())
+    assert out[0][1] == n
+    return time.time() - t0
+
+job()                      # warm: codegen + JIT
+ts = sorted(job() for _ in range(runs))
+med = ts[len(ts) // 2]
+print(json.dumps({"cpus": cpus, "seconds": round(med, 3),
+                  "rows_per_sec": round(n / med, 1)}))
 spark.stop()
 """
 
@@ -128,9 +154,15 @@ def main():
             CHILD, [str(cpus), str(n_docs), str(runs), str(GATE_GBPS),
                     str(MAX_ATTEMPTS)])
     ceiling = [run_child(ALLOC, [str(t)]) for t in (1, 2, 4, 8, 16, 32)]
+    nat = {cpus: run_child(NATIVE, [str(cpus), str(NATIVE_ROWS), str(runs)])
+           for cpus in (lo, hi)}
+    native = {"n_rows": NATIVE_ROWS, "lo": nat[lo], "hi": nat[hi],
+              "scaling_efficiency": round(
+                  (nat[hi]["rows_per_sec"] / nat[lo]["rows_per_sec"])
+                  / (hi / lo), 3)}
 
     result = {"n_docs": n_docs, "gate_gbps": GATE_GBPS,
-              "legs": legs, "alloc_ceiling": ceiling}
+              "legs": legs, "alloc_ceiling": ceiling, "native": native}
     lo_c, hi_c = legs[lo]["clean"], legs[hi]["clean"]
     result["pair_clean"] = bool(len(lo_c) >= runs and len(hi_c) >= runs)
     if lo_c and hi_c:

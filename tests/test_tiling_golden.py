@@ -98,6 +98,38 @@ def test_resume_from_checkpoint(spark, tmp_path):
     cleanup_checkpoint(res)
 
 
+def test_resume_from_every_level(spark, tmp_path):
+    """Stop after each completed level L (max_levels=L+1), resume, and get
+    the fresh build's rows and the replay's rows every time."""
+    ids, xyz = ripple_cloud(20_000)
+    expected, _, _ = replay_tiling(ids, xyz, split_threshold=500)
+    exp = sorted(zip(ids.tolist(), expected.tolist()))
+
+    # a local cutoff at the split threshold keeps every big node in cell
+    # mode, so the tree takes one level per depth
+    def cfg(name, **kw):
+        return TilingConfig(split_threshold=500, in_kernel_threshold=500,
+                            local_hard_cap=500,
+                            checkpoint_dir=str(tmp_path / name), **kw)
+
+    df = _points_df(spark, ids, xyz)
+    fresh = build_tiling(spark, df, cfg("fresh"))
+    n_levels = len(fresh.counters["levels"])
+    assert n_levels >= 3, fresh.counters
+    rows = sorted(map(tuple, fresh.assignments.collect()))
+    assert rows == exp
+
+    for lv in range(n_levels):
+        partial = build_tiling(spark, df, cfg(f"l{lv}", max_levels=lv + 1))
+        assert len(partial.counters["levels"]) == lv + 1
+        res = build_tiling(spark, df, cfg(f"l{lv}"), resume=True)
+        assert res.counters["complete"], lv
+        assert res.counters["points_assigned"] == len(ids)
+        assert sorted(map(tuple, res.assignments.collect())) == rows, lv
+        cleanup_checkpoint(res)
+    cleanup_checkpoint(fresh)
+
+
 def test_express_mode_matches_replay(spark, tmp_path):
     """A megacity-style node far above the local cutoff goes through the
     'express' kernel (chain + spread re-emit) — must equal the replay."""
