@@ -148,18 +148,26 @@ def child_index_for_node(xyz: np.ndarray, frame) -> np.ndarray:
     return xyz_to_child_index(xyz, center)
 
 
-def xyz_to_key(xyz: np.ndarray, cell_count: np.ndarray, aabb_min: np.ndarray,
-               inv_aabb_size: np.ndarray, shift: int) -> np.ndarray:
+def grid_constants(frame: NodeFrame,
+                   cell_count: int = GRID_INITIAL_CELL_COUNT):
+    """Reference Grid constants (points_grid.py:45-63): (aabb_min f32,
+    scale = int32 cell_count * f32 (1/size), which numpy/numba promote to
+    FLOAT64 — node.py:30, distance.py:24-27)."""
+    inv = np.float32(1.0) / frame.size
+    return frame.aabb[0], np.array([cell_count] * 3, dtype=np.int32) * inv
+
+
+def xyz_to_key(xyz: np.ndarray, aabb_min: np.ndarray, scale: np.ndarray,
+               cell_count: int, shift: int) -> np.ndarray:
     """Bit-packed grid cell key: clamped per-axis cell index, y<<shift,
     z<<2*shift, summed. Same Morton-family packing as an H3/S2 encode.
 
     Mirrors the reference numba kernel's promotion EXACTLY
-    (distance.py:24-32): int32 cell_count * float32 inv promotes to
-    float64; (xyz - aabb_min) stays float32; the float64 product truncates
-    to int64. The engine's native Spark expression reproduces this with a
-    DOUBLE scale column times a FLOAT difference."""
-    scalef = cell_count * inv_aabb_size            # int32*f32 -> f64
-    a = (scalef * (xyz - aabb_min)).astype(np.int64)
+    (distance.py:24-32): the float64 `scale` (grid_constants) times the
+    float32 (xyz - aabb_min) difference, truncated to int64. The engine's
+    native Spark expression reproduces this with a DOUBLE scale column
+    times a FLOAT difference."""
+    a = (scale * (xyz - aabb_min)).astype(np.int64)
     a = np.minimum(np.maximum(a, 0), cell_count - 1)
     a[:, 1] <<= shift
     a[:, 2] <<= 2 * shift
@@ -168,18 +176,17 @@ def xyz_to_key(xyz: np.ndarray, cell_count: np.ndarray, aabb_min: np.ndarray,
 
 def cell_keys_for_node(xyz: np.ndarray, frame,
                        cell_count: int = GRID_INITIAL_CELL_COUNT) -> np.ndarray:
-    """Grid cell keys for points inside a node (reference Grid constants:
-    aabb_min f32, inv_aabb_size = 1/f32 size, points_grid.py:45-63)."""
+    """Grid cell keys for points inside a node (reference Grid constants,
+    see grid_constants)."""
     if not isinstance(frame, NodeFrame):
         aabb64 = np.asarray(frame, dtype=np.float64)
         frame = NodeFrame(aabb=aabb64.astype(np.float32), center=None,
                           size=(aabb64[1] - aabb64[0]).astype(np.float32),
                           spacing=0.0)
-    inv = np.float32(1.0) / frame.size
-    counts = np.array([cell_count] * 3, dtype=np.int32)
+    aabb_min, scale = grid_constants(frame, cell_count)
     shift = int(cell_count - 1).bit_length()
-    return xyz_to_key(xyz.astype(np.float32, copy=False), counts,
-                      frame.aabb[0], inv, shift)
+    return xyz_to_key(xyz.astype(np.float32, copy=False), aabb_min, scale,
+                      cell_count, shift)
 
 
 def sequential_accept(xyz: np.ndarray, squared_spacing: float) -> np.ndarray:

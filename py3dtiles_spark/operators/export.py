@@ -320,6 +320,28 @@ def _vt_tile_json(nodes: dict, key, geometric_error: float,
     return t
 
 
+def _vt_tileset(roots: list, geometric_error, transform) -> dict:
+    """tileset.json around the level-0 tiles; the root box is the union of
+    their boxes. No level-0 node (empty input) raises ValueError instead of
+    writing a NaN/-Infinity root box that json.dumps emits as invalid
+    JSON."""
+    if not roots:
+        raise ValueError("vector tileset has no level-0 node (empty input)")
+    boxes = [t["boundingVolume"]["box"] for t in roots]
+    mins = [min(b[i] - b[3 + 4 * i] for b in boxes) for i in range(3)]
+    maxs = [max(b[i] + b[3 + 4 * i] for b in boxes) for i in range(3)]
+    center = [(mins[i] + maxs[i]) / 2 for i in range(3)]
+    half = [(maxs[i] - mins[i]) / 2 for i in range(3)]
+    root = {"boundingVolume": {"box": [round(v, 3) for v in (
+                center + [half[0], 0, 0, 0, half[1], 0, 0, 0, half[2]])]},
+            "geometricError": geometric_error, "refine": "add",
+            "children": roots}
+    if transform is not None:
+        root["transform"] = [round(float(e), 3) for e in transform]
+    return {"asset": {"version": "1.0"}, "geometricError": geometric_error,
+            "root": root}
+
+
 def build_vector_tileset(assigned_rows, transform=None,
                          geometric_error: float = 500.0) -> dict:
     """Driver-side tileset.json for the quadtree (reference Node.to_tileset,
@@ -333,25 +355,7 @@ def build_vector_tileset(assigned_rows, transform=None,
     nodes = _vt_nodes_from_rows(assigned_rows)
     roots = [_vt_tile_json(nodes, k, geometric_error)
              for k in sorted(nodes) if k[0] == 0]
-    root = {"asset": {"version": "1.0"},
-            "geometricError": geometric_error,
-            "root": {"boundingVolume": None, "geometricError": geometric_error,
-                     "refine": "add", "children": roots}}
-    # root bbox = union of level-0 children
-    mins = [math.inf] * 3
-    maxs = [-math.inf] * 3
-    for t in roots:
-        b = t["boundingVolume"]["box"]
-        for i in range(3):
-            mins[i] = min(mins[i], b[i] - b[3 + 4 * i])
-            maxs[i] = max(maxs[i], b[i] + b[3 + 4 * i])
-    center = [(mins[i] + maxs[i]) / 2 for i in range(3)]
-    half = [(maxs[i] - mins[i]) / 2 for i in range(3)]
-    root["root"]["boundingVolume"] = {"box": [round(v, 3) for v in (
-        center + [half[0], 0, 0, 0, half[1], 0, 0, 0, half[2]])]}
-    if transform is not None:
-        root["root"]["transform"] = [round(float(e), 3) for e in transform]
-    return root
+    return _vt_tileset(roots, geometric_error, transform)
 
 
 def build_vector_tileset_distributed(boxes: DataFrame, transform=None,
@@ -390,7 +394,10 @@ def build_vector_tileset_distributed(boxes: DataFrame, transform=None,
     def subtree_kernel(pdf):
         nodes = _vt_nodes_from_rows(pdf.to_dict("records"))
         root_key = min(nodes)          # the level-k subtree root
-        assert root_key[0] == k, (root_key, k)
+        if root_key[0] != k:
+            raise ValueError(
+                f"quadtree node {root_key} (level, cell_x, cell_y) has no "
+                f"level-{k} ancestor in the boxes frame")
         doc = _vt_tile_json(nodes, root_key, ge)
         return _pd.DataFrame(
             {"cell_x": [root_key[1]], "cell_y": [root_key[2]],
@@ -412,21 +419,4 @@ def build_vector_tileset_distributed(boxes: DataFrame, transform=None,
     nodes = _vt_nodes_from_rows(shallow)
     roots = [_vt_tile_json(nodes, key, ge, overrides)
              for key in sorted(nodes) if key[0] == 0]
-    root = {"asset": {"version": "1.0"},
-            "geometricError": ge,
-            "root": {"boundingVolume": None, "geometricError": ge,
-                     "refine": "add", "children": roots}}
-    mins = [math.inf] * 3
-    maxs = [-math.inf] * 3
-    for t in roots:
-        b = t["boundingVolume"]["box"]
-        for i in range(3):
-            mins[i] = min(mins[i], b[i] - b[3 + 4 * i])
-            maxs[i] = max(maxs[i], b[i] + b[3 + 4 * i])
-    center = [(mins[i] + maxs[i]) / 2 for i in range(3)]
-    half = [(maxs[i] - mins[i]) / 2 for i in range(3)]
-    root["root"]["boundingVolume"] = {"box": [round(v, 3) for v in (
-        center + [half[0], 0, 0, 0, half[1], 0, 0, 0, half[2]])]}
-    if transform is not None:
-        root["root"]["transform"] = [round(float(e), 3) for e in transform]
-    return root
+    return _vt_tileset(roots, ge, transform)

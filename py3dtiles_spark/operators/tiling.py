@@ -8,12 +8,13 @@ build is a level-synchronous iteration (SURVEY.md §3.1 "Spark shape").
 Per level, two phases:
 
   1. routing: groupBy(tile_id).agg(count, bbox) — one row per live node,
-     fetched through a BOUNDED limit probe: levels under
-     node_broadcast_rows route driver-side over O(cap) rows (pure-JVM
-     probe job, LocalRelation broadcast — the fast common case); over-cap
-     levels run the SAME rule as a distributed DataFrame plan
-     (_node_meta_df: native when() + an Arrow kernel for big-node rows)
-     and the driver sees just the <=4-row per-mode histogram. Modes:
+     routed by ONE batch-vectorized pandas function (_route_nodes) that
+     runs wherever the node list lives. A BOUNDED limit probe fetches up
+     to NODE_BROADCAST_ROWS nodes: those levels route on the driver
+     (pure-JVM probe job, node list shipped back as a LocalRelation
+     broadcast — the fast common case). Over-cap levels run the same
+     function inside mapInPandas on the executors, and the driver sees
+     just the <=4-row per-mode histogram. Modes:
        leaf    count < 20000 or spacing floor  -> accept all (node.py:70-73)
        local   count <= local cutoff           -> one task recurses the
                WHOLE subtree (the reference's depth-limited pipelining,
@@ -45,12 +46,12 @@ Points are carried NARROW through the loop (point_id + xyz float32 only);
 payload columns (url, html, text...) are joined back once at the end — at
 100 TB you never shuffle the html through the tree.
 
-Driver traffic is BOUNDED by node_broadcast_rows (~12 MB at the default
-200k): at 10^12 docs a level can hold ~5e7 live nodes, which would make
-an unbounded driver collect the reference master's State-dict bottleneck
-reborn (convert.py:217-239) — those levels stay distributed (shuffled
-node_meta join; only the per-mode histogram is collected for loop
-termination and the manifest).
+Driver traffic is BOUNDED by NODE_BROADCAST_ROWS (~12 MB at 200k rows):
+at 10^12 docs a level can hold ~5e7 live nodes, which would make an
+unbounded driver collect the reference master's State-dict bottleneck
+reborn (convert.py:217-239) — those levels stay distributed (executor-side
+routing, shuffled node_meta join; only the per-mode histogram is collected
+for loop termination and the manifest).
 
 Counters (points in / nodes / modes / phase seconds per level) land in a
 manifest JSON per level; the written==read invariant of the reference
@@ -64,18 +65,20 @@ import os
 import shutil
 import tempfile
 import time
+from collections import Counter
 from dataclasses import dataclass, field
 from typing import Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from py3dtiles_spark.functions.geometry import (
     GRID_INITIAL_CELL_COUNT,
     MIN_SPACING,
     SPLIT_THRESHOLD,
     cell_keys_for_node,
+    grid_constants,
     node_frame,
     sequential_accept,
     child_index_for_node,
@@ -87,13 +90,36 @@ PENDING_SCHEMA = "point_id long, x float, y float, z float, tile_id string"
 KERNEL_SCHEMA = PENDING_SCHEMA + ", accepted boolean"
 ASSIGN_SCHEMA = "point_id long, tile_id string"
 
-# node_meta columns (produced by _node_meta_df): mn* grid aabb_min
+# node_meta columns (produced by _route_nodes): mn* grid aabb_min
 # (float32, reference Grid constant); s* cell_count * inv_aabb_size —
 # DOUBLE because the reference numba kernel promotes int32 * float32 to
 # float64 (distance.py:24-27)
 _NODE_META_SCHEMA = ("tile_id string, mode string, "
                      "mnx float, mny float, mnz float, "
                      "sx double, sy double, sz double")
+
+# Levels whose live-node list fits in this many rows route on the driver
+# and ride to the executors as a LocalRelation broadcast (no extra job, no
+# broadcast exchange — the sandbox/common case); bigger levels NEVER reach
+# the driver: they route on the executors and node_meta joins to pending
+# with a shuffled join (the right call anyway — at ~5e7 nodes the list is
+# GBs, far past broadcast territory). 200k rows ~= 12 MB driver-side, a
+# hard bound independent of data scale.
+NODE_BROADCAST_ROWS = 200_000
+
+# Once a level has enough nodes to saturate the cluster, nodes up to this
+# many rows resolve their whole subtree in-task (local mode) instead of
+# paying shuffle+Arrow plumbing for every remaining level. The effective
+# local cutoff is
+#   max(in_kernel_threshold, min(LOCAL_HARD_CAP, level_points / parallelism))
+# i.e. one local task's rows ~= one core's fair share, which measured
+# strictly better than half a share at 1.6M docs/skew: level count 5 -> 2
+# (megacity nodes resolve their whole chain in-task via express descent
+# instead of shuffling every level) and 8-core wall time -23%. The hard cap
+# bounds any single local task (a megacity node as one task = a
+# multi-second straggler that caps scaling); nodes above it fan out per
+# cell.
+LOCAL_HARD_CAP = 300_000
 
 
 @dataclass
@@ -102,21 +128,8 @@ class TilingConfig:
     split_threshold: int = SPLIT_THRESHOLD
     # nodes at or below this size finish their whole subtree in one task;
     # keep near 2x split_threshold so big nodes keep fanning out per-cell
+    # (the level-size-aware local cutoff is in LOCAL_HARD_CAP's comment)
     in_kernel_threshold: int = 40_000
-    # once a level has enough nodes to saturate the cluster, nodes up to
-    # this many rows resolve their whole subtree in-task (local mode)
-    # instead of paying shuffle+Arrow plumbing for every remaining level.
-    # The effective local cutoff is
-    #   max(in_kernel_threshold,
-    #       min(local_hard_cap, level_points / parallelism))
-    # i.e. one local task's rows ~= one core's fair share, which measured
-    # strictly better than half a share at 1.6M docs/skew: level count
-    # 5 -> 2 (megacity nodes resolve their whole chain in-task via express
-    # descent instead of shuffling every level) and 8-core wall time -23%.
-    # The hard cap bounds any single local task (a megacity node as one
-    # task = a multi-second straggler that caps scaling); nodes above it
-    # fan out per cell.
-    local_hard_cap: int = 300_000
     # parallelism used for the local-cutoff rule. None = the session's
     # defaultParallelism; set a fixed value to make the level plan
     # independent of the core count (identical plans across cluster sizes,
@@ -127,14 +140,6 @@ class TilingConfig:
     # cluster scale the level snapshot IS the recovery unit and feeds the
     # final assignment read). None = a fresh temp dir.
     checkpoint_dir: Optional[str] = None
-    # levels whose routed node list fits in this many rows ride to the
-    # executors as a LocalRelation broadcast (no extra job, no broadcast
-    # exchange — the sandbox/common case); bigger levels NEVER reach the
-    # driver: their node_meta stays a distributed frame and joins to
-    # pending with a shuffled join (the right call anyway — at ~5e7 nodes
-    # the list is GBs, far past broadcast territory). 200k rows ~= 12 MB
-    # driver-side, a hard bound independent of data scale.
-    node_broadcast_rows: int = 200_000
     # explicit root geometry (float64 (2,3) + spacing). The LAS/XYZ convert
     # plan passes the header-derived float64 aabb here for exact reference
     # parity (convert.py:420-437); None = one agg pass over the points.
@@ -263,96 +268,48 @@ def _unified_kernel(cfg: TilingConfig, root_aabb, root_spacing):
     return kernel
 
 
-def _node_meta_rows(counts_rows, cfg: TilingConfig, root_aabb, root_spacing,
-                    local_cutoff: int):
-    """Driver-side routing for a BOUNDED node list (<= node_broadcast_rows,
-    fetched via the limit probe): per live node -> mode + grid constants
-    for cell nodes (aabb_min float32, scale = cell_count * inv_aabb_size
-    float64 — the reference kernel's exact promotion). Pure-JVM probe job
-    + O(cap) python beats the distributed plan's extra Arrow-UDF job by
-    ~35% flagship wall at sandbox scale (measured A/B); _node_meta_df is the
-    SAME rule as a DataFrame plan for over-cap levels. Keep the two in
-    lockstep (the over-cap golden test pins their agreement)."""
-    spacing_floor = MIN_SPACING * cfg.scale
-    rows = []
-    for r in counts_rows:
-        tid, cnt = r["tile_id"], r["cnt"]
-        spacing = root_spacing * (0.5 ** len(tid))
-        if cnt < cfg.split_threshold or spacing <= spacing_floor:
-            rows.append((tid, "leaf", 0.0, 0.0, 0.0, 0.0, 0.0, 0.0))
-            continue
-        if cnt > cfg.in_kernel_threshold:
-            # clustered-node check: a node whose whole bbox maps into ONE
-            # child octant (megacity cluster) runs 'express' — accept AND
-            # descend in-task, one shuffle round for the entire hot chain
-            frame = node_frame(tid, root_aabb, root_spacing)
-            corners = np.array([[r["bx0"], r["by0"], r["bz0"]],
-                                [r["bx1"], r["by1"], r["bz1"]]],
-                               dtype=np.float32)
-            cd = child_index_for_node(corners, frame)
-            if cd[0] == cd[1]:
-                rows.append((tid, "express", 0.0, 0.0, 0.0, 0.0, 0.0, 0.0))
-                continue
-        if cnt <= local_cutoff:
-            rows.append((tid, "local", 0.0, 0.0, 0.0, 0.0, 0.0, 0.0))
-        else:
-            frame = node_frame(tid, root_aabb, root_spacing)
-            inv = np.float32(1.0) / frame.size          # f32 (node.py:30)
-            scale = (np.array([GRID_INITIAL_CELL_COUNT] * 3, dtype=np.int32)
-                     * inv)                             # int32*f32 -> f64
-            rows.append((tid, "cell",
-                         float(frame.aabb[0][0]), float(frame.aabb[0][1]),
-                         float(frame.aabb[0][2]),
-                         float(scale[0]), float(scale[1]), float(scale[2])))
-    return rows
-
-
-def _node_geom_udf(cfg: TilingConfig, root_aabb, root_spacing):
-    """Arrow-batched per-node geometry for the big-node rows only
-    (`need`=true, i.e. non-leaf with cnt > in_kernel_threshold): the
-    express single-child corner test plus the cell-grid constants
-    (aabb_min float32, scale = cell_count * inv_aabb_size float64 — the
-    reference kernel's exact promotion, node.py:30 / distance.py:24-27).
-    Node-count sized, never point-count sized."""
-    ra = np.asarray(root_aabb, dtype=np.float64)
-    rs = float(root_spacing)
-
-    @F.pandas_udf("express boolean, mnx float, mny float, mnz float, "
-                  "sx double, sy double, sz double")
-    def geom(tile_id: pd.Series, need: pd.Series,
-             bx0: pd.Series, by0: pd.Series, bz0: pd.Series,
-             bx1: pd.Series, by1: pd.Series,
-             bz1: pd.Series) -> pd.DataFrame:
-        n = len(tile_id)
-        out = {"express": np.zeros(n, dtype=bool),
-               "mnx": np.zeros(n, np.float32),
-               "mny": np.zeros(n, np.float32),
-               "mnz": np.zeros(n, np.float32),
-               "sx": np.zeros(n, np.float64),
-               "sy": np.zeros(n, np.float64),
-               "sz": np.zeros(n, np.float64)}
-        for i in np.flatnonzero(need.to_numpy()):
-            frame = node_frame(tile_id.iat[i], ra, rs)
-            corners = np.array([[bx0.iat[i], by0.iat[i], bz0.iat[i]],
-                                [bx1.iat[i], by1.iat[i], bz1.iat[i]]],
-                               dtype=np.float32)
-            cd = child_index_for_node(corners, frame)
-            if cd[0] == cd[1]:
-                out["express"][i] = True
-                continue
-            inv = np.float32(1.0) / frame.size          # f32 (node.py:30)
-            scale = (np.array([GRID_INITIAL_CELL_COUNT] * 3, dtype=np.int32)
-                     * inv)                             # int32*f32 -> f64
-            out["mnx"][i], out["mny"][i], out["mnz"][i] = frame.aabb[0]
-            out["sx"][i], out["sy"][i], out["sz"][i] = scale
-        return pd.DataFrame(out)
-
-    return geom
+def _route_nodes(counts: pd.DataFrame, cfg: TilingConfig, root_aabb,
+                 root_spacing, local_cutoff: int) -> pd.DataFrame:
+    """The one per-node routing rule, over a batch of the level's
+    (tile_id, cnt, bx0..bz1) aggregate -> (tile_id, mode, mn*, s*, cnt):
+    run on the driver over the bounded probe, inside mapInPandas for
+    over-cap levels. Modes (reference node.py:70-73 + node_process.py:82-90
+    generalized):
+      leaf     cnt < split_threshold or spacing <= floor -> accept all
+      express  cnt > in_kernel_threshold and the bbox sits in ONE child
+      local    cnt <= local_cutoff -> whole subtree in one task
+      cell     fan out per LOD-grid cell (mn*, s*: grid_constants)
+    Only the big non-leaf nodes fold a node_frame; local_cutoff >=
+    in_kernel_threshold (_local_cutoff), so every cell node is one."""
+    cnt = counts["cnt"].to_numpy()
+    depth = counts["tile_id"].str.len().to_numpy()
+    spacing = float(root_spacing) * np.power(0.5, depth)
+    leaf = (cnt < cfg.split_threshold) | (spacing <= MIN_SPACING * cfg.scale)
+    mode = np.where(leaf, "leaf", np.where(cnt <= local_cutoff, "local",
+                                           "cell")).astype(object)
+    mn = np.zeros((len(counts), 3), dtype=np.float32)
+    sc = np.zeros((len(counts), 3), dtype=np.float64)
+    bbox = counts[["bx0", "by0", "bz0", "bx1", "by1", "bz1"]].to_numpy(
+        dtype=np.float32).reshape(-1, 2, 3)
+    for i in np.flatnonzero(~leaf & (cnt > cfg.in_kernel_threshold)):
+        frame = node_frame(counts["tile_id"].iat[i], root_aabb, root_spacing)
+        cd = child_index_for_node(bbox[i], frame)
+        if cd[0] == cd[1]:
+            # the whole bbox maps into ONE child octant (a megacity
+            # cluster): accept AND descend in-task, one shuffle round for
+            # the entire hot chain
+            mode[i] = "express"
+        elif mode[i] == "cell":
+            mn[i], sc[i] = grid_constants(frame)
+    return pd.DataFrame({
+        "tile_id": counts["tile_id"].to_numpy(), "mode": mode,
+        "mnx": mn[:, 0], "mny": mn[:, 1], "mnz": mn[:, 2],
+        "sx": sc[:, 0], "sy": sc[:, 1], "sz": sc[:, 2], "cnt": cnt})
 
 
 def _local_cutoff(cfg: TilingConfig, est_total: Optional[int],
                   parallelism: int) -> int:
-    """Effective local-mode cutoff (see TilingConfig). `est_total` is the
+    """Effective local-mode cutoff (see LOCAL_HARD_CAP). `est_total` is the
     level's point total — known exactly on the driver as the PREVIOUS
     level's points_in (each level's input is a subset of the prior one),
     None for level 0 / resume without manifests, where the conservative
@@ -365,56 +322,7 @@ def _local_cutoff(cfg: TilingConfig, est_total: Optional[int],
     if est_total is None:
         return cfg.in_kernel_threshold
     return max(cfg.in_kernel_threshold,
-               min(cfg.local_hard_cap, est_total // max(1, parallelism)))
-
-
-def _node_meta_df(counts: DataFrame, cfg: TilingConfig, root_aabb,
-                  root_spacing, local_cutoff: int) -> DataFrame:
-    """Distributed node routing: per live node -> mode (+ grid constants
-    for cell nodes). Collecting every level's node list to the driver and
-    rebuilding it row-by-row is fine at sandbox scale but the reference
-    master's State dict reborn: at 10^12 points a level can hold ~5x10^7
-    live nodes. Here the routing is a DataFrame plan over the
-    (tile_id, cnt, bbox) aggregate:
-
-      leaf / local / cell         native when() over cnt + name-derived
-                                  spacing (pow(0.5, length(tile_id)))
-      express corner test +       Arrow kernel over ONLY the big-node rows
-      cell grid constants         (_node_geom_udf)
-
-    build_tiling fetches the result through a BOUNDED limit probe
-    (node_broadcast_rows); an over-cap level never reaches the driver.
-
-    Mode rule (the same as _node_meta_rows; reference node.py:70-73 +
-    node_process.py:82-90 generalized):
-      leaf     cnt < split_threshold or spacing <= floor -> accept all
-      express  big node whose bbox sits in ONE child octant
-      local    cnt <= local_cutoff -> whole subtree in one task
-      cell     fan out per LOD-grid cell
-    """
-    spacing_floor = float(MIN_SPACING * cfg.scale)
-    c = counts
-    spacing = (F.lit(float(root_spacing))
-               * F.pow(F.lit(0.5), F.length("tile_id")))
-    is_leaf = ((F.col("cnt") < int(cfg.split_threshold))
-               | (spacing <= F.lit(spacing_floor)))
-    need_geom = (~is_leaf) & (F.col("cnt") > int(cfg.in_kernel_threshold))
-
-    geom = _node_geom_udf(cfg, root_aabb, root_spacing)
-    c = c.withColumn("g", geom(
-        F.col("tile_id"), need_geom,
-        F.col("bx0"), F.col("by0"), F.col("bz0"),
-        F.col("bx1"), F.col("by1"), F.col("bz1")))
-    mode = (F.when(is_leaf, F.lit("leaf"))
-            .when(need_geom & F.col("g.express"), F.lit("express"))
-            .when(F.col("cnt") <= F.lit(int(local_cutoff)), F.lit("local"))
-            .otherwise(F.lit("cell")))
-    return c.select(
-        "tile_id", mode.alias("mode"), "cnt",
-        F.col("g.mnx").alias("mnx"), F.col("g.mny").alias("mny"),
-        F.col("g.mnz").alias("mnz"),
-        F.col("g.sx").alias("sx"), F.col("g.sy").alias("sy"),
-        F.col("g.sz").alias("sz"))
+               min(LOCAL_HARD_CAP, est_total // max(1, parallelism)))
 
 
 def _root_route_expr(root_aabb, root_spacing):
@@ -424,8 +332,7 @@ def _root_route_expr(root_aabb, root_spacing):
     float32 center literal is equivalent to the reference's
     (xyz - center) >= 0 float32 test (nearby-operand subtraction is exact,
     and rounding never flips the sign of a nonzero difference)."""
-    from py3dtiles_spark.functions.geometry import (
-        QUADTREE, node_frame, subdivision_type)
+    from py3dtiles_spark.functions.geometry import QUADTREE, subdivision_type
     frame = node_frame("", root_aabb, root_spacing)
     cx, cy = float(frame.center[0]), float(frame.center[1])
     cz = (float(frame.aabb[1][2])
@@ -437,26 +344,26 @@ def _root_route_expr(root_aabb, root_spacing):
     return digit.cast("string")
 
 
-def _native_cell_key():
-    """group_key as a native column expression mirroring the reference
-    xyz_to_key promotion exactly (distance.py:24-32): the DOUBLE scale
-    column (int32 cell_count * float32 inv -> f64) times the FLOAT
-    (xyz - aabb_min) difference widened to double (exact), truncated to
-    long and clamped, packed y<<s | z<<2s. Keeping the product in f64
+def cell_key_expr(aabb_min, scale) -> Column:
+    """Grid cell key of the x/y/z columns as a native expression, given
+    three float aabb_min and three double scale Columns (column refs or
+    literals of geometry.grid_constants). Mirrors the reference xyz_to_key
+    promotion exactly (distance.py:24-32): the DOUBLE scale times the
+    FLOAT (xyz - aabb_min) difference widened to double (exact), truncated
+    to long and clamped, packed y<<s | z<<2s. Keeping the product in f64
     matches the numpy/numba kernel bit-for-bit on boundary points where a
     float32 product would round 0.99999997 up to 1.0."""
     c = GRID_INITIAL_CELL_COUNT
     shift = int(c - 1).bit_length()
 
     def axis(col, mn, sc):
-        diff = (F.col(col).cast("float") - F.col(mn).cast("float")).cast("float")
-        prod = F.col(sc) * diff.cast("double")
+        diff = (F.col(col).cast("float") - mn.cast("float")).cast("float")
+        prod = sc * diff.cast("double")
         return F.least(F.greatest(prod.cast("long"), F.lit(0)), F.lit(c - 1))
 
-    key = (axis("x", "mnx", "sx")
-           + F.shiftleft(axis("y", "mny", "sy"), shift)
-           + F.shiftleft(axis("z", "mnz", "sz"), 2 * shift))
-    return F.when(F.col("mode") == "cell", key).otherwise(F.lit(0))
+    return (axis("x", aabb_min[0], scale[0])
+            + F.shiftleft(axis("y", aabb_min[1], scale[1]), shift)
+            + F.shiftleft(axis("z", aabb_min[2], scale[2]), 2 * shift))
 
 
 def build_tiling(spark: SparkSession, points: DataFrame,
@@ -500,45 +407,10 @@ def build_tiling(spark: SparkSession, points: DataFrame,
         for d in os.listdir(ckpt):
             if d.startswith("level="):
                 shutil.rmtree(os.path.join(ckpt, d), ignore_errors=True)
-    input_cached = None
-    if start_level == 0:
-        # persist the narrow input BEFORE the AABB pass — level 0 consumes
-        # the upstream lineage three times (AABB agg, per-node counts,
-        # kernel pass); caching the 21 B/point narrow rows turns three
-        # source-scan/generation executions into one. Released as soon as
-        # level 0's checkpoint is on disk: every later level reads parquet.
-        from pyspark import StorageLevel
-        input_cached = narrow = narrow.persist(StorageLevel.MEMORY_AND_DISK)
-    if not resuming:
-        if cfg.root_aabb is not None:
-            root_aabb = np.asarray(cfg.root_aabb, dtype=np.float64)
-            root_spacing = (float(cfg.root_spacing)
-                            if cfg.root_spacing is not None
-                            else compute_spacing(root_aabb))
-        else:
-            root_aabb, root_spacing = compute_root_aabb(narrow)
-        with open(meta_path, "w") as f:
-            json.dump({"root_aabb": root_aabb.tolist(),
-                       "root_spacing": root_spacing,
-                       "scale": cfg.scale}, f)
 
-    if start_level == 0:
-        # ROOT HOP — reference semantics: the root never retains points
-        # (node_process.py:88,109 forces make_empty_node for name='', so
-        # every point forwards to a depth-1 octant; the root pnts is a
-        # post-hoc overview, operators/tileset.py root_overview). Pure JVM
-        # column expression over the CACHED narrow rows: zero shuffle,
-        # zero Python for the full-volume level — the cheapest possible
-        # level 0 at 100 TB. The route expression re-evaluates per
-        # consumer pass (cheap float compares), the cached input does not.
-        pending = narrow.withColumn("tile_id", _root_route_expr(root_aabb,
-                                                                root_spacing))
-    else:
-        pending = _read_pending(
-            spark, os.path.join(ckpt, f"level={start_level - 1}", "out"))
-
-    kernel = _unified_kernel(cfg, root_aabb, root_spacing)
-    group_key = _native_cell_key()
+    group_key = F.when(F.col("mode") == "cell", cell_key_expr(
+        [F.col(c) for c in ("mnx", "mny", "mnz")],
+        [F.col(c) for c in ("sx", "sy", "sz")])).otherwise(F.lit(0))
     # level-total estimate for the local cutoff: the previous level's
     # points_in (this level's input is a subset of it); on resume, the
     # last completed manifest. None (level 0 of a fresh run) -> the
@@ -546,6 +418,7 @@ def build_tiling(spark: SparkSession, points: DataFrame,
     est_total = (counters["levels"][-1]["points_in"]
                  if counters["levels"] else None)
     complete = False
+    input_cached = None
 
     # kernel groups are CPU-heavy but byte-tiny (narrow rows): AQE's
     # byte-based partition coalescing would serialize them onto a few
@@ -563,6 +436,46 @@ def build_tiling(spark: SparkSession, points: DataFrame,
     spark.conf.set(_limit_key, "100000")
 
     try:
+        if start_level == 0:
+            # persist the narrow input BEFORE the AABB pass — level 0
+            # consumes the upstream lineage three times (AABB agg,
+            # per-node counts, kernel pass); caching the 21 B/point narrow
+            # rows turns three source-scan/generation executions into one.
+            # Released as soon as level 0's checkpoint is on disk: every
+            # later level reads parquet.
+            from pyspark import StorageLevel
+            input_cached = narrow = narrow.persist(
+                StorageLevel.MEMORY_AND_DISK)
+        if not resuming:
+            if cfg.root_aabb is not None:
+                root_aabb = np.asarray(cfg.root_aabb, dtype=np.float64)
+                root_spacing = (float(cfg.root_spacing)
+                                if cfg.root_spacing is not None
+                                else compute_spacing(root_aabb))
+            else:
+                root_aabb, root_spacing = compute_root_aabb(narrow)
+            with open(meta_path, "w") as f:
+                json.dump({"root_aabb": root_aabb.tolist(),
+                           "root_spacing": root_spacing,
+                           "scale": cfg.scale}, f)
+
+        if start_level == 0:
+            # ROOT HOP — reference semantics: the root never retains
+            # points (node_process.py:88,109 forces make_empty_node for
+            # name='', so every point forwards to a depth-1 octant; the
+            # root pnts is a post-hoc overview, operators/tileset.py
+            # root_overview). Pure JVM column expression over the CACHED
+            # narrow rows: zero shuffle, zero Python for the full-volume
+            # level — the cheapest possible level 0 at 100 TB. The route
+            # expression re-evaluates per consumer pass (cheap float
+            # compares), the cached input does not.
+            pending = narrow.withColumn(
+                "tile_id", _root_route_expr(root_aabb, root_spacing))
+        else:
+            pending = _read_pending(
+                spark, os.path.join(ckpt, f"level={start_level - 1}", "out"))
+        kernel = _unified_kernel(cfg, root_aabb, root_spacing)
+
         for level in range(start_level, cfg.max_levels):
             lv_dir = os.path.join(ckpt, f"level={level}")
             t0 = time.time()
@@ -578,23 +491,22 @@ def build_tiling(spark: SparkSession, points: DataFrame,
                            F.max("z").alias("bz1")))
             parallelism = (cfg.plan_parallelism
                            or spark.sparkContext.defaultParallelism)
-            # BOUNDED probe: a level with <= node_broadcast_rows live nodes
+            # BOUNDED probe: a level with <= NODE_BROADCAST_ROWS live nodes
             # (every sandbox level; most real levels) comes back whole from
-            # the ONE pure-JVM routing job — modes computed driver-side over
-            # the O(cap) rows (with the exact level total for the local
+            # the ONE pure-JVM routing job — routed driver-side over the
+            # O(cap) rows (with the exact level total for the local
             # cutoff), node list re-shipped as a LocalRelation broadcast (no
             # broadcast-exchange job, no Arrow stage). Over-cap levels never
-            # reach the driver: _node_meta_df runs the SAME rule as a
-            # distributed plan, only the per-mode histogram is collected, and
-            # node_meta joins to pending by shuffle (a GB-sized node list has
-            # no business being broadcast anyway).
-            cap = int(cfg.node_broadcast_rows)
+            # reach the driver: the same _route_nodes runs in mapInPandas,
+            # only the per-mode histogram is collected, and node_meta joins
+            # to pending by shuffle (a GB-sized node list has no business
+            # being broadcast anyway).
+            cap = NODE_BROADCAST_ROWS
             node_meta_full = None
-            # persisted so the over-cap path's _node_meta_df
-            # materialization reads the cached node rows instead of
-            # re-running the full groupBy over every pending point (the
-            # level's priciest pass); dropped right after the probe on
-            # the common path
+            # persisted so the over-cap path's routing pass reads the
+            # cached node rows instead of re-running the full groupBy over
+            # every pending point (the level's priciest pass); dropped
+            # right after the probe on the common path
             counts = counts.persist()
             probe = counts.limit(cap + 1).collect()
             broadcast_path = len(probe) <= cap
@@ -602,17 +514,18 @@ def build_tiling(spark: SparkSession, points: DataFrame,
                 counts.unpersist()
                 n_in = int(sum(r["cnt"] for r in probe))
                 cutoff = _local_cutoff(cfg, n_in if n_in else None, parallelism)
-                meta_rows = (_node_meta_rows(probe, cfg, root_aabb,
-                                             root_spacing, cutoff)
-                             if n_in else [])
-                modes = {}
-                for _, mode, *_ in meta_rows:
-                    modes[mode] = modes.get(mode, 0) + 1
-                n_nodes = len(meta_rows)
+                routed = _route_nodes(
+                    pd.DataFrame(probe, columns=counts.columns), cfg,
+                    root_aabb, root_spacing, cutoff)
+                modes = dict(Counter(routed["mode"]))
+                n_nodes = len(routed)
             else:
                 cutoff = _local_cutoff(cfg, est_total, parallelism)
-                node_meta_full = _node_meta_df(counts, cfg, root_aabb,
-                                               root_spacing, cutoff).persist()
+                node_meta_full = counts.mapInPandas(
+                    lambda batches: (_route_nodes(b, cfg, root_aabb,
+                                                  root_spacing, cutoff)
+                                     for b in batches),
+                    _NODE_META_SCHEMA + ", cnt long").persist()
                 stats_rows = (node_meta_full.groupBy("mode")
                               .agg(F.count("*").alias("nodes"),
                                    F.sum("cnt").alias("pts")).collect())
@@ -630,7 +543,12 @@ def build_tiling(spark: SparkSession, points: DataFrame,
 
             t0 = time.time()
             if broadcast_path:
-                node_meta = spark.createDataFrame(meta_rows, _NODE_META_SCHEMA)
+                # python tuples keep node_meta a LocalRelation (an Arrow
+                # createDataFrame from pandas would plan an RDD scan)
+                node_meta = spark.createDataFrame(
+                    list(routed.drop(columns="cnt")
+                         .itertuples(index=False, name=None)),
+                    _NODE_META_SCHEMA)
                 tagged = pending.join(F.broadcast(node_meta), "tile_id")
             else:
                 tagged = pending.join(node_meta_full.drop("cnt"), "tile_id")

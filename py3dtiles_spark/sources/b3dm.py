@@ -184,9 +184,8 @@ def b3dm_bytes(glb: bytes, batch_table: dict | None = None) -> bytes:
 def parse_b3dm(buf: bytes) -> dict:
     """Decode a b3dm tile: header fields + glTF JSON header (+ft/bt JSON).
     Read-side S5 operator; handles legacy tiles with feature-table JSON."""
-    magic, version, total, ftj, ftb, btj, btb = struct.unpack(
-        "<4sIIIIII", buf[:B3DM_HEADER_LEN])
-    assert magic == b"b3dm", magic
+    from py3dtiles_spark.sources.pnts import read_tile_header
+    version, total, ftj, ftb, btj, btb = read_tile_header(buf, b"b3dm")
     off = B3DM_HEADER_LEN
     ft = json.loads(buf[off:off + ftj]) if ftj else None
     off += ftj + ftb
@@ -196,12 +195,10 @@ def parse_b3dm(buf: bytes) -> dict:
     g_magic, g_version, g_len = struct.unpack("<III", glb[:12])
     if g_magic != GLB_MAGIC:
         raise ValueError("no glb chunk")
-    if g_version >= 2:
-        json_len = struct.unpack("<I", glb[12:16])[0]
-        gltf = json.loads(glb[20:20 + json_len])
-    else:                      # glTF 1.0 (dragon_low fixture)
-        json_len = struct.unpack("<I", glb[12:16])[0]
-        gltf = json.loads(glb[20:20 + json_len])
+    # glTF 2.0 and 1.0 (dragon_low fixture) both put the JSON length at
+    # byte 12 and the JSON at byte 20
+    json_len = struct.unpack("<I", glb[12:16])[0]
+    gltf = json.loads(glb[20:20 + json_len])
     return {"version": version, "tile_byte_length": total,
             "ft_json_byte_length": ftj, "ft_bin_byte_length": ftb,
             "bt_json_byte_length": btj, "bt_bin_byte_length": btb,

@@ -51,6 +51,24 @@ def encode_pnts(xyz: np.ndarray, rgb: np.ndarray | None = None,
     return header + ft_json + body
 
 
+def read_tile_header(buf: bytes, magic: bytes):
+    """The 28-byte 3D Tiles header of a pnts/b3dm tile, checked: returns
+    (version, tile_byte_length, ft_json, ft_bin, bt_json, bt_bin) and
+    raises ValueError on a short buffer, wrong magic, a version other than
+    1 or a tile_byte_length that does not match the buffer."""
+    if len(buf) < PNTS_HEADER_LEN:
+        raise ValueError(f"{len(buf)}-byte tile is shorter than the header")
+    got, *fields = struct.unpack("<4sIIIIII", buf[:PNTS_HEADER_LEN])
+    if got != magic:
+        raise ValueError(f"bad tile magic {got!r}, expected {magic!r}")
+    if fields[0] != 1:
+        raise ValueError(f"{magic!r} tile version {fields[0]}, expected 1")
+    if fields[1] != len(buf):
+        raise ValueError(f"{magic!r} tile header says {fields[1]} bytes, "
+                         f"buffer has {len(buf)}")
+    return tuple(fields)
+
+
 def decode_pnts(buf: bytes, apply_rtc: bool = True):
     """Inverse of encode_pnts, extended to the full spec position/color
     semantics the reference reads (feature_table.py:178-182,232-265):
@@ -58,11 +76,7 @@ def decode_pnts(buf: bytes, apply_rtc: bool = True):
     QUANTIZED_VOLUME_SCALE/OFFSET), RGB or RGBA (alpha dropped), and
     RTC_CENTER added to positions (in f64, then narrowed) when apply_rtc.
     Returns (xyz f32 (N,3), rgb u8 (N,3) | None, feature_table dict)."""
-    magic, version, total, ftj, ftb, btj, btb = struct.unpack(
-        "<4sIIIIII", buf[:PNTS_HEADER_LEN])
-    assert magic == _MAGIC, magic
-    assert version == 1
-    assert total == len(buf), (total, len(buf))
+    _, _, ftj, ftb, _, _ = read_tile_header(buf, _MAGIC)
     ft = json.loads(buf[PNTS_HEADER_LEN:PNTS_HEADER_LEN + ftj])
     body = buf[PNTS_HEADER_LEN + ftj:PNTS_HEADER_LEN + ftj + ftb]
     n = ft["POINTS_LENGTH"]
@@ -124,7 +138,8 @@ def relpath_to_name(path: str) -> str:
     """Inverse of name_to_relpath: '.../06/r63.pnts' -> '0663'."""
     parts = path.replace("\\", "/").split("/")
     tail = parts[-1]
-    assert tail.endswith(".pnts"), path
+    if not tail.endswith(".pnts"):
+        raise ValueError(f"not a .pnts path: {path}")
     if not tail.startswith("r"):
         # third-party tileset (not reference-sharded): tile id = file stem
         return tail[:-len(".pnts")]

@@ -259,11 +259,11 @@ def main():
         lines.append("")
     spark.stop()
 
-    # flagship driver-traffic audit (VERDICT r4 #3): every .collect() in
-    # the level loop must be provably bounded — the scalar root-aabb agg,
-    # the limit(cap+1) routing probe, or the <=4-row per-mode histogram.
-    # An unbounded pending/counts collect reintroduces the reference
-    # master bottleneck and fails this audit.
+    # flagship driver-traffic audit (VERDICT r4 #3): every .collect() and
+    # .toPandas() in the level loop must be provably bounded — the scalar
+    # root-aabb agg, the limit(cap+1) routing probe, or the <=4-row
+    # per-mode histogram. An unbounded pending/counts fetch reintroduces
+    # the reference master bottleneck and fails this audit.
     import ast
     src_path = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "py3dtiles_spark", "operators",
@@ -276,7 +276,7 @@ def main():
     for node in ast.walk(ast.parse(src)):
         if (isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "collect"):
+                and node.func.attr in ("collect", "toPandas")):
             # the exact source of THIS call chain — not a line window
             # that could pick up unrelated neighboring statements
             stmt = ast.get_source_segment(src, node) or ""
@@ -290,11 +290,11 @@ def main():
     mark = "PASS" if not unbounded else "FAIL"
     if unbounded:
         failures += len(unbounded)
-    lines.append(f"- [{mark}] every collect() is a bounded probe or a "
-                 f"scalar/histogram agg ({allowed} allowed, "
+    lines.append(f"- [{mark}] every collect()/toPandas() is a bounded "
+                 f"probe or a scalar/histogram agg ({allowed} allowed, "
                  f"{len(unbounded)} unbounded: {unbounded})")
     print(f"{mark} flagship_tiling: bounded driver traffic "
-          f"({allowed} collects audited)")
+          f"({allowed} collect/toPandas calls audited)")
     lines.append("")
 
     # tileset_emit driver-traffic audit (VERDICT r5 #1): the BVH assembly

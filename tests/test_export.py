@@ -371,3 +371,45 @@ def test_vector_tileset_distributed_byte_identical(spark):
                                             subtree_depth=9)
     assert json.dumps(dist) == json.dumps(mono)
     boxes.unpersist()
+
+
+def test_b3dm_header_checks_raise_value_error():
+    import struct
+
+    pos = np.array([[0, 0, 0], [1, 0, 0], [0, 1, 0]], dtype=np.float32)
+    norm = np.array([[0, 0, 1]] * 3, dtype=np.float32)
+    glb = gltf_from_arrays(
+        [{"position": pos, "normal": norm, "bbox": [[0, 0, 0], [1, 1, 0]]}],
+        np.identity(4).flatten("F"), batched=True)
+    buf = b3dm_bytes(glb, {"id": [1]})
+    assert parse_b3dm(buf)["tile_byte_length"] == len(buf)
+    cases = {
+        "bad tile magic": b"pnts" + buf[4:],
+        "version 2": buf[:4] + struct.pack("<I", 2) + buf[8:],
+        "header says": buf[:-4],
+        "shorter than": buf[:27],
+    }
+    for msg, bad in cases.items():
+        with pytest.raises(ValueError, match=msg):
+            parse_b3dm(bad)
+
+
+def test_vector_tileset_rejects_empty_and_sparse_input(spark):
+    from pyspark.errors import PythonException
+
+    from py3dtiles_spark.operators.export import (
+        build_vector_tileset, build_vector_tileset_distributed)
+
+    schema = ("level long, cell_x long, cell_y long, bx0 double, "
+              "by0 double, bz0 double, bx1 double, by1 double, bz1 double")
+    with pytest.raises(ValueError, match="no level-0 node"):
+        build_vector_tileset([])
+    with pytest.raises(ValueError, match="no level-0 node"):
+        build_vector_tileset_distributed(spark.createDataFrame([], schema))
+    # a level-2 node whose level-1 ancestor is missing
+    sparse = spark.createDataFrame(
+        [(0, 0, 0, 0.0, 0.0, 0.0, 8.0, 8.0, 1.0),
+         (2, 3, 1, 6.0, 2.0, 0.0, 8.0, 4.0, 1.0)], schema)
+    with pytest.raises(PythonException,
+                       match=r"ValueError: quadtree node \(2, 3, 1\)"):
+        build_vector_tileset_distributed(sparse, subtree_depth=1)

@@ -177,3 +177,26 @@ def test_pnts_scan_reference_fixture(spark, tmp_path):
     rtc = np.array([1215012.8828876738, -4736313.051199594, 4081605.22126042])
     got = np.array([[r.x, r.y, r.z] for r in rows])
     assert np.all(np.abs(got - rtc) < 1000.0)
+
+
+def _corrupt(buf: bytes, offset: int, value: bytes) -> bytes:
+    return buf[:offset] + value + buf[offset + len(value):]
+
+
+def test_pnts_header_checks_raise_value_error():
+    import struct
+
+    import pytest
+
+    buf = encode_pnts(np.zeros((4, 3), dtype=np.float32))
+    cases = {
+        "bad tile magic": _corrupt(buf, 0, b"b3dm"),
+        "version 2": _corrupt(buf, 4, struct.pack("<I", 2)),
+        "header says": buf + b"\0" * 8,
+        "shorter than": buf[:20],
+    }
+    for msg, bad in cases.items():
+        with pytest.raises(ValueError, match=msg):
+            decode_pnts(bad)
+    with pytest.raises(ValueError, match="not a .pnts path"):
+        relpath_to_name("tiles/r0.b3dm")

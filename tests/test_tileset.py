@@ -188,3 +188,43 @@ def test_distributed_tileset_executor_write(spark, tmp_path):
                 assert json.dumps(mono[name]) == json.dumps(json.load(f))
         else:
             assert json.dumps(mono[name]) == json.dumps(dist[name])
+
+
+def test_root_overview_matches_numpy_twin(spark, tmp_path):
+    """root_overview (native root-grid key + per-cell accept) keeps exactly
+    the points a numpy twin keeps: depth-1 rows in (tile_id, point_id)
+    order, grouped by the root grid cell, accepted per cell at
+    (2 * root_spacing)^2."""
+    from py3dtiles_spark.functions.geometry import (
+        cell_keys_for_node, node_frame, sequential_accept)
+    from py3dtiles_spark.operators.tiling import (
+        TilingConfig, build_tiling, cleanup_checkpoint)
+    from py3dtiles_spark.operators.tileset import root_overview
+    from py3dtiles_spark.sources.ripple import ripple_cloud
+    import pandas as pd
+
+    ids, xyz = ripple_cloud(20_000)
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"point_id": ids, "x": xyz[:, 0], "y": xyz[:, 1], "z": xyz[:, 2]}))
+    res = build_tiling(spark, pts, TilingConfig(
+        split_threshold=2000, in_kernel_threshold=6000,
+        checkpoint_dir=str(tmp_path / "ov")))
+    assigned = pts.join(res.assignments, "point_id")
+    got = sorted(r.point_id for r in root_overview(
+        assigned, res.root_aabb, res.root_spacing).collect())
+
+    tiles = dict(map(tuple, res.assignments.collect()))
+    d1 = sorted((tiles[int(i)], int(i)) for i in ids
+                if len(tiles[int(i)]) == 1)
+    d1_ids = np.array([i for _, i in d1], dtype=np.int64)
+    d1_xyz = xyz[d1_ids]
+    keys = cell_keys_for_node(
+        d1_xyz, node_frame("", res.root_aabb, res.root_spacing))
+    sq = (2.0 * res.root_spacing) ** 2
+    want = []
+    for k in np.unique(keys):
+        sel = keys == k
+        want.extend(d1_ids[sel][sequential_accept(d1_xyz[sel], sq)].tolist())
+    assert 0 < len(want) < len(d1_ids)
+    assert got == sorted(want)
+    cleanup_checkpoint(res)

@@ -5,6 +5,7 @@ the exact-tile-assignment requirement of BASELINE.json."""
 import numpy as np
 import pytest
 
+from py3dtiles_spark.operators import tiling
 from py3dtiles_spark.operators.replay import replay_tiling
 from py3dtiles_spark.operators.tiling import (
     TilingConfig, build_tiling, cleanup_checkpoint, compute_root_aabb)
@@ -98,7 +99,7 @@ def test_resume_from_checkpoint(spark, tmp_path):
     cleanup_checkpoint(res)
 
 
-def test_resume_from_every_level(spark, tmp_path):
+def test_resume_from_every_level(spark, tmp_path, monkeypatch):
     """Stop after each completed level L (max_levels=L+1), resume, and get
     the fresh build's rows and the replay's rows every time."""
     ids, xyz = ripple_cloud(20_000)
@@ -107,9 +108,10 @@ def test_resume_from_every_level(spark, tmp_path):
 
     # a local cutoff at the split threshold keeps every big node in cell
     # mode, so the tree takes one level per depth
+    monkeypatch.setattr(tiling, "LOCAL_HARD_CAP", 500)
+
     def cfg(name, **kw):
         return TilingConfig(split_threshold=500, in_kernel_threshold=500,
-                            local_hard_cap=500,
                             checkpoint_dir=str(tmp_path / name), **kw)
 
     df = _points_df(spark, ids, xyz)
@@ -130,7 +132,7 @@ def test_resume_from_every_level(spark, tmp_path):
     cleanup_checkpoint(fresh)
 
 
-def test_express_mode_matches_replay(spark, tmp_path):
+def test_express_mode_matches_replay(spark, tmp_path, monkeypatch):
     """A megacity-style node far above the local cutoff goes through the
     'express' kernel (chain + spread re-emit) — must equal the replay."""
     rng = np.random.default_rng(11)
@@ -144,8 +146,8 @@ def test_express_mode_matches_replay(spark, tmp_path):
     xyz[hot, 1] = 30.0 + rng.uniform(-0.01, 0.01, hot.sum())
     ids = np.arange(n, dtype=np.int64)
     expected, _, _ = replay_tiling(ids, xyz, split_threshold=500)
+    monkeypatch.setattr(tiling, "LOCAL_HARD_CAP", 2000)
     cfg = TilingConfig(split_threshold=500, in_kernel_threshold=1000,
-                       local_hard_cap=2000,
                        checkpoint_dir=str(tmp_path / "exp"))
     got, res = _engine_assignments(spark, ids, xyz, cfg)
     modes = [m for s in res.counters["levels"] for m in s["modes"]]
@@ -154,15 +156,15 @@ def test_express_mode_matches_replay(spark, tmp_path):
     cleanup_checkpoint(res)
 
 
-def test_distributed_routing_over_cap(spark, tmp_path):
-    """node_broadcast_rows below the live-node count forces the fully
-    distributed routing path (shuffled node_meta join, histogram-only
-    driver traffic) — must produce the exact same assignments as the
-    LocalRelation broadcast path."""
+def test_distributed_routing_over_cap(spark, tmp_path, monkeypatch):
+    """NODE_BROADCAST_ROWS below the live-node count forces the fully
+    distributed routing path (mapInPandas routing, shuffled node_meta
+    join, histogram-only driver traffic) — must produce the exact same
+    assignments as the LocalRelation broadcast path."""
     ids, xyz = ripple_cloud(30_000)
     expected, _, _ = replay_tiling(ids, xyz, split_threshold=2000)
+    monkeypatch.setattr(tiling, "NODE_BROADCAST_ROWS", 2)
     cfg = TilingConfig(split_threshold=2000, in_kernel_threshold=6000,
-                       node_broadcast_rows=2,
                        checkpoint_dir=str(tmp_path / "overcap"))
     got, res = _engine_assignments(spark, ids, xyz, cfg)
     exp = {int(i): t for i, t in zip(ids, expected)}
@@ -195,20 +197,21 @@ def test_resume_missing_level_raises(spark, tmp_path):
                      TilingConfig(checkpoint_dir=str(ckpt)), resume=True)
 
 
-def test_node_meta_df_matches_driver_rules(spark):
-    """The distributed routing plan (_node_meta_df) and the driver-side
-    rules (_node_meta_rows) must agree node-for-node — mode AND cell grid
-    constants — on a randomized node population covering all four modes."""
-    import numpy as np
+def test_route_nodes_same_on_driver_and_executors(spark, monkeypatch):
+    """_route_nodes is the one routing rule: on the driver over a pandas
+    frame and inside mapInPandas over a 4-partition frame it must give
+    identical rows — mode AND the float32/float64 cell grid constants,
+    which have to survive Arrow — on a randomized node population covering
+    all four modes."""
     import pandas as pd
     from py3dtiles_spark.operators.tiling import (
-        TilingConfig, _local_cutoff, _node_meta_df, _node_meta_rows)
+        _NODE_META_SCHEMA, _local_cutoff, _route_nodes)
 
     rng = np.random.default_rng(13)
     root_aabb = np.array([[0.0, 0.0, 0.0], [64.0, 64.0, 32.0]])
     root_spacing = 0.25
-    cfg = TilingConfig(split_threshold=2000, in_kernel_threshold=6000,
-                       local_hard_cap=50_000)
+    monkeypatch.setattr(tiling, "LOCAL_HARD_CAP", 50_000)
+    cfg = TilingConfig(split_threshold=2000, in_kernel_threshold=6000)
     rows = []
     for i in range(120):
         depth = int(rng.integers(0, 6))
@@ -224,23 +227,40 @@ def test_node_meta_df_matches_driver_rules(spark):
     pdf = pd.DataFrame(rows, columns=["tile_id", "cnt", "bx0", "by0",
                                       "bz0", "bx1", "by1", "bz1"])
     pdf = pdf.drop_duplicates("tile_id")
-    total = int(pdf["cnt"].sum())
-    cutoff = _local_cutoff(cfg, total, 8)
+    pdf[["bx0", "by0", "bz0", "bx1", "by1", "bz1"]] = (
+        pdf[["bx0", "by0", "bz0", "bx1", "by1", "bz1"]].astype(np.float32))
+    cutoff = _local_cutoff(cfg, int(pdf["cnt"].sum()), 8)
 
-    counts = spark.createDataFrame(pdf)
-    got = {r["tile_id"]: r for r in _node_meta_df(
-        counts, cfg, root_aabb, root_spacing, cutoff).collect()}
-    exp_rows = _node_meta_rows(
-        [r._asdict() if hasattr(r, "_asdict") else dict(r)
-         for r in pdf.to_dict("records")],
-        cfg, root_aabb, root_spacing, cutoff)
-    assert len(got) == len(exp_rows)
-    modes_seen = set()
-    for tid, mode, mnx, mny, mnz, sx, sy, sz in exp_rows:
-        g = got[tid]
-        assert g["mode"] == mode, (tid, g["mode"], mode)
-        modes_seen.add(mode)
-        if mode == "cell":
-            assert (g["mnx"], g["mny"], g["mnz"]) == (mnx, mny, mnz), tid
-            assert (g["sx"], g["sy"], g["sz"]) == (sx, sy, sz), tid
-    assert {"leaf", "local", "cell", "express"} <= modes_seen
+    driver = _route_nodes(pdf, cfg, root_aabb, root_spacing, cutoff)
+    counts = spark.createDataFrame(
+        pdf, "tile_id string, cnt long, bx0 float, by0 float, bz0 float, "
+             "bx1 float, by1 float, bz1 float").repartition(4)
+    executors = counts.mapInPandas(
+        lambda batches: (_route_nodes(b, cfg, root_aabb, root_spacing,
+                                      cutoff) for b in batches),
+        _NODE_META_SCHEMA + ", cnt long").collect()
+
+    want = sorted(driver.itertuples(index=False, name=None))
+    got = sorted(tuple(r) for r in executors)
+    assert got == want
+    assert len(got) == len(pdf)
+    assert set(driver["mode"]) == {"leaf", "local", "cell", "express"}
+    cell = driver[driver["mode"] == "cell"]
+    assert (cell["sx"] > 0).all() and (cell["mnx"].dtype == np.float32)
+
+
+def test_failed_aabb_pass_releases_input_cache(spark, tmp_path, monkeypatch):
+    """The narrow input is persisted before the root AABB pass; if that
+    pass raises, the exception propagates and the cache is released."""
+    def boom(points):
+        points.count()          # materialize the persisted input first
+        raise RuntimeError("aabb pass failed")
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(tiling, "compute_root_aabb", boom)
+    ids, xyz = ripple_cloud(1000)
+    df = _points_df(spark, ids, xyz)
+    with pytest.raises(RuntimeError, match="aabb pass failed"):
+        build_tiling(spark, df,
+                     TilingConfig(checkpoint_dir=str(tmp_path / "boom")))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
