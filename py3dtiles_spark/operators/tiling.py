@@ -11,10 +11,11 @@ Per level, two phases:
      routed by ONE batch-vectorized pandas function (_route_nodes) that
      runs wherever the node list lives. A BOUNDED limit probe fetches up
      to NODE_BROADCAST_ROWS nodes: those levels route on the driver
-     (pure-JVM probe job, node list shipped back as a LocalRelation
-     broadcast — the fast common case). Over-cap levels run the same
-     function inside mapInPandas on the executors, and the driver sees
-     just the <=4-row per-mode histogram. Modes:
+     (pure-JVM probe job; the routed pandas frame crosses back to the JVM
+     as one Arrow batch and plans as a LocalRelation, so its broadcast is
+     a few-ms local table scan — the fast common case). Over-cap levels
+     run the same function inside mapInPandas on the executors, and the
+     driver sees just the <=4-row per-mode histogram. Modes:
        leaf    count < 20000 or spacing floor  -> accept all (node.py:70-73)
        local   count <= local cutoff           -> one task recurses the
                WHOLE subtree (the reference's depth-limited pipelining,
@@ -40,7 +41,10 @@ Per level, two phases:
      level=N/out/accepted=true|false/ with a level=N/_MANIFEST.json. That
      parquet is the per-level checkpoint: resumable and
      lineage-truncating; the next level reads the accepted=false half,
-     the final assignments read every accepted=true half.
+     the final assignments read every accepted=true half. An ALL-LEAF
+     level (always the last) changes no row, so instead of a join and a
+     write it hard-links level N-1's accepted=false files in as its own
+     accepted=true half.
 
 Points are carried NARROW through the loop (point_id + xyz float32 only);
 payload columns (url, html, text...) are joined back once at the end — at
@@ -99,8 +103,9 @@ _NODE_META_SCHEMA = ("tile_id string, mode string, "
                      "sx double, sy double, sz double")
 
 # Levels whose live-node list fits in this many rows route on the driver
-# and ride to the executors as a LocalRelation broadcast (no extra job, no
-# broadcast exchange — the sandbox/common case); bigger levels NEVER reach
+# and ride to the executors as a broadcast LocalRelation (built from one
+# Arrow batch; each broadcast is a few-ms LocalTableScan job, no RDD scan
+# and no Python — the sandbox/common case); bigger levels NEVER reach
 # the driver: they route on the executors and node_meta joins to pending
 # with a shuffled join (the right call anyway — at ~5e7 nodes the list is
 # GBs, far past broadcast territory). 200k rows ~= 12 MB driver-side, a
@@ -493,21 +498,24 @@ def build_tiling(spark: SparkSession, points: DataFrame,
                            or spark.sparkContext.defaultParallelism)
             # BOUNDED probe: a level with <= NODE_BROADCAST_ROWS live nodes
             # (every sandbox level; most real levels) comes back whole from
-            # the ONE pure-JVM routing job — routed driver-side over the
+            # the pure-JVM routing pass and is routed driver-side over the
             # O(cap) rows (with the exact level total for the local
-            # cutoff), node list re-shipped as a LocalRelation broadcast (no
-            # broadcast-exchange job, no Arrow stage). Over-cap levels never
-            # reach the driver: the same _route_nodes runs in mapInPandas,
-            # only the per-mode histogram is collected, and node_meta joins
-            # to pending by shuffle (a GB-sized node list has no business
-            # being broadcast anyway).
+            # cutoff); the node list goes back as a broadcast LocalRelation
+            # (one Arrow batch; no RDD scan, no Python stage). Over-cap
+            # levels never reach the driver: the same _route_nodes runs in
+            # mapInPandas, only the per-mode histogram is collected, and
+            # node_meta joins to pending by shuffle (a GB-sized node list
+            # has no business being broadcast anyway).
             cap = NODE_BROADCAST_ROWS
             node_meta_full = None
             # persisted so the over-cap path's routing pass reads the
             # cached node rows instead of re-running the full groupBy over
-            # every pending point (the level's priciest pass); dropped
-            # right after the probe on the common path
-            counts = counts.persist()
+            # every pending point (the level's priciest pass). A level has
+            # no more nodes than points and no more points than the
+            # previous level, so a level with est_total <= cap always takes
+            # the broadcast path and the cache would be dead weight.
+            if est_total is None or est_total > cap:
+                counts = counts.persist()
             probe = counts.limit(cap + 1).collect()
             broadcast_path = len(probe) <= cap
             if broadcast_path:
@@ -542,53 +550,68 @@ def build_tiling(spark: SparkSession, points: DataFrame,
             est_total = n_in   # next level's input is a subset of this one's
 
             t0 = time.time()
-            if broadcast_path:
-                # python tuples keep node_meta a LocalRelation (an Arrow
-                # createDataFrame from pandas would plan an RDD scan)
-                node_meta = spark.createDataFrame(
-                    list(routed.drop(columns="cnt")
-                         .itertuples(index=False, name=None)),
-                    _NODE_META_SCHEMA)
-                tagged = pending.join(F.broadcast(node_meta), "tile_id")
-            else:
-                tagged = pending.join(node_meta_full.drop("cnt"), "tile_id")
-            # leaf rows (the bulk at deep levels) are final as-is: pure JVM
-            # filter, NO shuffle, NO Python — node.py:70-73 leaf semantics
-            leaf_rows = (tagged.filter(F.col("mode") == "leaf")
-                         .select("point_id", "x", "y", "z", "tile_id",
-                                 F.lit(True).alias("accepted")))
-            if set(modes) == {"leaf"}:
-                # ALL-LEAF level (always the build's final level): the
-                # non-leaf branch is provably empty — skip its shuffle +
-                # Arrow kernel plan entirely instead of scheduling an
-                # empty applyInPandas stage (the mode histogram is already
-                # known driver-side either way)
-                out_df = leaf_rows
-            else:
+            out_df = None
+            if set(modes) != {"leaf"}:
+                if broadcast_path:
+                    # the routed pandas frame crosses to the JVM as one
+                    # Arrow batch and plans as a LocalRelation (a list of
+                    # Python tuples would plan as an RDD scan)
+                    node_meta = F.broadcast(spark.createDataFrame(
+                        routed.drop(columns="cnt"), _NODE_META_SCHEMA))
+                else:
+                    node_meta = node_meta_full.drop("cnt")
+                tagged = pending.join(node_meta, "tile_id")
+                # leaf rows are final as-is: pure JVM filter, NO shuffle,
+                # NO Python — node.py:70-73 leaf semantics
+                leaf_rows = (tagged.filter(F.col("mode") == "leaf")
+                             .select("point_id", "x", "y", "z", "tile_id",
+                                     F.lit(True).alias("accepted")))
                 nonleaf = (tagged.filter(F.col("mode") != "leaf")
                            .withColumn("gk", group_key)
                            .drop("mnx", "mny", "mnz", "sx", "sy", "sz")
                            .groupBy("tile_id", "gk")
                            .applyInPandas(kernel, schema=KERNEL_SCHEMA))
                 out_df = nonleaf.unionByName(leaf_rows)
-            # hive-partition by `accepted`: ONE write, but the next level's
-            # NOT-accepted read partition-prunes the finalized rows away
-            # entirely and the final assignments union reads only
-            # accepted=true dirs — at deep levels (mostly-leaf output) this
-            # halves checkpoint read volume, which on a fault-bound host is
-            # wall-clock.
-            # Kernel parallelism is decoupled from output file count: the
-            # kernel fans out at shuffle width, but its output is n_in
-            # narrow rows (~40 B each); letting every kernel/leaf task open
-            # its own dynamic-partition writers produced ~200 KB-sized files
-            # per level and paid seconds of open/commit overhead.
-            # Repartition to a size-derived file count (128 MB target)
-            # first: locally 1-2 write tasks, petabyte levels thousands —
-            # never a constant tuned to either.
-            target_files = max(1, -(-n_in * 40 // (128 << 20)))
-            (out_df.repartition(target_files)
-             .write.mode("overwrite").partitionBy("accepted")
-             .parquet(os.path.join(lv_dir, "out")))
+            elif level == 0:
+                # all-leaf level 0 (a tiny input): pending is the
+                # root-routed input, not on disk yet — write it as accepted
+                out_df = pending.withColumn("accepted", F.lit(True))
+            else:
+                # ALL-LEAF level (always the build's final level) whose
+                # pending rows are level L-1's accepted=false files: every
+                # row keeps the tile it carries, and `accepted` is a hive
+                # partition column, not a stored one, so those files ARE
+                # this level's accepted=true half. Hard-link them in — no
+                # join, kernel, shuffle or driver-side byte copy. Crash
+                # order: a partial level dir left by an interrupted attempt
+                # is removed first, and the manifest (what marks the level
+                # done for resume) is written only after every link exists.
+                shutil.rmtree(lv_dir, ignore_errors=True)
+                shutil.copytree(
+                    os.path.join(ckpt, f"level={level - 1}", "out",
+                                 "accepted=false"),
+                    os.path.join(lv_dir, "out", "accepted=true"),
+                    copy_function=os.link)
+            if out_df is not None:
+                # hive-partition by `accepted`: ONE write, but the next
+                # level's NOT-accepted read partition-prunes the finalized
+                # rows away entirely and the final assignments union reads
+                # only accepted=true dirs — at deep levels (mostly-leaf
+                # output) this halves checkpoint read volume, which on a
+                # fault-bound host is wall-clock.
+                # Kernel parallelism is decoupled from output file count:
+                # the kernel fans out at shuffle width, but its output is
+                # n_in narrow rows (~40 B each); letting every kernel/leaf
+                # task open its own dynamic-partition writers produced
+                # ~200 KB-sized files per level and paid seconds of
+                # open/commit overhead. Repartition to a size-derived file
+                # count (128 MB target) first: locally 1-2 write tasks,
+                # petabyte levels thousands — never a constant tuned to
+                # either.
+                target_files = max(1, -(-n_in * 40 // (128 << 20)))
+                (out_df.repartition(target_files)
+                 .write.mode("overwrite").partitionBy("accepted")
+                 .parquet(os.path.join(lv_dir, "out")))
             t_kernel = time.time() - t0
             if node_meta_full is not None:
                 node_meta_full.unpersist()

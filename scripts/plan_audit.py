@@ -297,6 +297,38 @@ def main():
           f"({allowed} collect/toPandas calls audited)")
     lines.append("")
 
+    # the routed node list must cross to the JVM as one Arrow batch (a
+    # LocalRelation): createDataFrame over a Python list, a list
+    # comprehension or list(...) plans as an RDD scan, and every level
+    # then runs its broadcast jobs over that RDD. An empty [] literal
+    # carries no rows and is allowed.
+    lines.append("## flagship_tiling — node list ships as one Arrow batch")
+    audited, rdd_scans = 0, []
+    for node in ast.walk(ast.parse(src)):
+        if not (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"):
+            continue
+        audited += 1
+        data = (node.args[0] if node.args else
+                next((k.value for k in node.keywords if k.arg == "data"),
+                     None))
+        if (isinstance(data, ast.ListComp)
+                or (isinstance(data, ast.List) and data.elts)
+                or (isinstance(data, ast.Call)
+                    and isinstance(data.func, ast.Name)
+                    and data.func.id == "list")):
+            rdd_scans.append((node.lineno, ast.get_source_segment(
+                src, data).splitlines()[0].strip()))
+    mark = "PASS" if not rdd_scans else "FAIL"
+    failures += len(rdd_scans)
+    lines.append(f"- [{mark}] no createDataFrame over a Python list "
+                 f"({audited} calls audited, {len(rdd_scans)} RDD-scan "
+                 f"sources: {rdd_scans})")
+    print(f"{mark} flagship_tiling: node list ships as Arrow "
+          f"({audited} createDataFrame calls audited)")
+    lines.append("")
+
     # tileset_emit driver-traffic audit (VERDICT r5 #1): the BVH assembly
     # must never collect the tiles table on the production paths. In
     # operators/tileset.py the only allowed collects are the distributed

@@ -2,6 +2,8 @@
 (single-threaded reference semantics) tile-for-tile, point-for-point —
 the exact-tile-assignment requirement of BASELINE.json."""
 
+import os
+
 import numpy as np
 import pytest
 
@@ -264,3 +266,90 @@ def test_failed_aabb_pass_releases_input_cache(spark, tmp_path, monkeypatch):
         build_tiling(spark, df,
                      TilingConfig(checkpoint_dir=str(tmp_path / "boom")))
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _cell_mode_cfg(tmp_path, name, monkeypatch):
+    """test_resume_from_every_level's config: one level per depth, ending
+    in an all-leaf level."""
+    monkeypatch.setattr(tiling, "LOCAL_HARD_CAP", 500)
+    return TilingConfig(split_threshold=500, in_kernel_threshold=500,
+                        checkpoint_dir=str(tmp_path / name))
+
+
+def _inodes(d):
+    return {os.stat(os.path.join(d, f)).st_ino for f in os.listdir(d)}
+
+
+def test_node_list_plan_and_linked_final_level(spark, tmp_path, monkeypatch):
+    """Every routed level broadcasts its node list as a LocalRelation (one
+    Arrow batch, no RDD scan); the final all-leaf level is the previous
+    level's pending files hard-linked in, and the tiling_octree DuckDB
+    glob reads back exactly the returned assignments."""
+    import duckdb
+
+    ids, xyz = ripple_cloud(20_000)
+    broadcast = tiling.F.broadcast
+    plans = []
+
+    def spy(df):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return broadcast(df)
+
+    monkeypatch.setattr(tiling.F, "broadcast", spy)
+    cfg = _cell_mode_cfg(tmp_path, "link", monkeypatch)
+    res = build_tiling(spark, _points_df(spark, ids, xyz), cfg)
+    levels = res.counters["levels"]
+    assert len(levels) >= 3, levels
+    assert set(levels[-1]["modes"]) == {"leaf"}
+    assert all(set(s["modes"]) != {"leaf"} for s in levels[:-1])
+
+    assert len(plans) == len(levels) - 1
+    for plan in plans:
+        assert plan.startswith("LocalRelation"), plan
+        assert "LogicalRDD" not in plan, plan
+
+    last = levels[-1]["level"]
+    linked = os.path.join(res.checkpoint_dir, f"level={last}", "out",
+                          "accepted=true")
+    pending = os.path.join(res.checkpoint_dir, f"level={last - 1}", "out",
+                           "accepted=false")
+    assert os.listdir(linked)
+    assert _inodes(linked) <= _inodes(pending)
+
+    glob = res.checkpoint_dir + "/level=*/out/accepted=true/*.parquet"
+    ckpt_rows = duckdb.sql(
+        f"SELECT point_id, tile_id FROM read_parquet('{glob}', "
+        "hive_partitioning = 0)").fetchall()
+    assert len(ckpt_rows) == len(ids)
+    assert sorted(ckpt_rows) == sorted(map(tuple,
+                                           res.assignments.collect()))
+    cleanup_checkpoint(res)
+
+
+def test_resume_after_crash_in_linked_level(spark, tmp_path, monkeypatch):
+    """A crash while the all-leaf level is being linked leaves a partial
+    accepted=true dir and no manifest; resume redoes that level and gets
+    the fresh build's rows."""
+    ids, xyz = ripple_cloud(20_000)
+    df = _points_df(spark, ids, xyz)
+    cfg = _cell_mode_cfg(tmp_path, "crash", monkeypatch)
+    fresh = build_tiling(spark, df, cfg)
+    rows = sorted(map(tuple, fresh.assignments.collect()))
+    levels = fresh.counters["levels"]
+    last = levels[-1]["level"]
+    assert set(levels[-1]["modes"]) == {"leaf"}
+
+    lv_dir = os.path.join(cfg.checkpoint_dir, f"level={last}")
+    os.remove(os.path.join(lv_dir, "_MANIFEST.json"))
+    linked = os.path.join(lv_dir, "out", "accepted=true")
+    names = sorted(os.listdir(linked))
+    for f in names[len(names) // 2:]:
+        os.remove(os.path.join(linked, f))
+
+    res = build_tiling(spark, df, cfg, resume=True)
+    assert res.counters["complete"]
+    assert [s["level"] for s in res.counters["levels"]] == \
+        [s["level"] for s in levels]
+    assert res.counters["points_assigned"] == len(ids)
+    assert sorted(map(tuple, res.assignments.collect())) == rows
+    cleanup_checkpoint(res)
